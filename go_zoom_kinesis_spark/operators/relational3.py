@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.fixedpoint import fsum, isum
-from ..io import fan_out_narrow, load_table
+from ..io import load_table
 
 DEC = "decimal(25,6)"
 

@@ -1703,9 +1703,9 @@ QUERIES["coreset_kcenter_sample"] = coreset_kcenter_sample
 def _coreset_oracle_sql() -> str:
     dot_ec = _DOT.format(a="e.emb", b="c.emb")
     ctes = [
-        "c0 AS (SELECT vec_id, emb, norm FROM en "
+        "c0 AS MATERIALIZED (SELECT vec_id, emb, norm FROM en "
         "WHERE vec_id = (SELECT min(vec_id) FROM en))",
-        f"""d1 AS (
+        f"""d1 AS MATERIALIZED (
             SELECT e.vec_id, e.emb, e.norm,
                    1 - {dot_ec} / (e.norm * c.norm) AS d
             FROM en e, c0 c
@@ -1716,7 +1716,7 @@ def _coreset_oracle_sql() -> str:
             f"SELECT vec_id FROM c{j}" for j in range(k)
         )
         ctes.append(
-            f"""c{k} AS (
+            f"""c{k} AS MATERIALIZED (
             SELECT vec_id, emb, norm, d FROM d{k}
             WHERE vec_id NOT IN ({prior})
             ORDER BY d DESC, vec_id ASC LIMIT 1
@@ -1724,7 +1724,7 @@ def _coreset_oracle_sql() -> str:
         )
         if k < CORESET_K - 1:
             ctes.append(
-                f"""d{k + 1} AS (
+                f"""d{k + 1} AS MATERIALIZED (
                 SELECT e.vec_id, e.emb, e.norm,
                        least(e.d, 1 - {dot_ec} / (e.norm * c.norm)) AS d
                 FROM d{k} e, c{k} c

@@ -15,6 +15,8 @@ checkpoint-preferred resume (src/processor.rs:801-868).
 Sequence numbers are compared as zero-padded strings — the reference's
 sequences are arbitrary-precision decimal strings (a 100-digit value in
 src/tests/initial_position_tests.rs:717 exceeds Decimal(38,0)).
+``pad_seq`` is that rule for a value and ``seq_order_key`` for a column;
+the processor's position filters and checkpoint max both use them.
 """
 
 from __future__ import annotations
@@ -25,11 +27,31 @@ import tempfile
 import threading
 from typing import Protocol
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
 SEQ_PAD = 128  # > the 100-digit boundary test value
+
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
 def pad_seq(seq: str | int) -> str:
     return str(seq).zfill(SEQ_PAD)
+
+
+def seq_order_key(col: str, dtype: T.DataType | None = None) -> Column:
+    """The sequence column's order key: ``pad_seq`` as a Column.
+
+    With an integral ``dtype`` the native column is returned: for
+    non-negative integers zero-padded lexicographic order IS numeric
+    order, so max(lpad(x)) == lpad(max(x)) and padding every row (a
+    128-char string per record) is pure loss. Any other type — and no
+    type, which is how the position filters call it, comparing against
+    ``pad_seq`` literals — gets the padded string."""
+    if isinstance(dtype, _INTEGRAL):
+        return F.col(col)
+    return F.lpad(F.col(col).cast("string"), SEQ_PAD, "0")
 
 
 class CheckpointStore(Protocol):
@@ -94,10 +116,15 @@ class JsonFileCheckpointStore:
             raise
 
     def all_checkpoints(self) -> dict[str, str]:
+        """This store's checkpoints only: a file under a shared root
+        counts when its name is ``_path`` of the shard it records, so
+        another ``key_prefix``'s positions never leak into a resume."""
         out = {}
         for name in os.listdir(self.root):
             if name.endswith(".json"):
-                with open(os.path.join(self.root, name)) as f:
+                path = os.path.join(self.root, name)
+                with open(path) as f:
                     rec = json.load(f)
-                out[rec["shard_id"]] = rec["sequence_number"]
+                if self._path(rec["shard_id"]) == path:
+                    out[rec["shard_id"]] = rec["sequence_number"]
         return out

@@ -30,7 +30,9 @@ Spark mapping:
                       skip validation but proceed — exactly the
                       reference's branch semantics
 - checkpoint (K1)   ⇒ store.save_checkpoint(shard, max success seq)
-                      per batch + Spark's own checkpointLocation
+                      per batch, the max folded from each attempt's
+                      outcome rollup (no separate job) + Spark's own
+                      checkpointLocation
 - total timeout (T4, src/processor.rs:624-670)
                     ⇒ awaitTermination(timeout) + stop()
 - graceful shutdown (P6) ⇒ query.stop() between micro-batches
@@ -63,7 +65,7 @@ from .retry import ShutdownRequested
 
 from . import monitoring as M
 from .backoff import ExponentialBackoff
-from .checkpoint import CheckpointStore, pad_seq
+from .checkpoint import CheckpointStore, pad_seq, seq_order_key
 from .monitoring import MetricsAggregator
 
 # --- initial positions (src/processor.rs:313-322) -----------------------
@@ -193,7 +195,7 @@ class StreamProcessor:
         (src/processor.rs:313-322)."""
         cfg = self.config
         pos = cfg.initial_position
-        pad = F.lpad(F.col(cfg.seq_col).cast("string"), 128, "0")
+        pad = seq_order_key(cfg.seq_col)
         if isinstance(pos, TrimHorizon):
             return F.lit(True)
         if isinstance(pos, Latest):
@@ -209,13 +211,7 @@ class StreamProcessor:
                     snap = self.spark.read.format(cfg.source_format).load(
                         cfg.source_path
                     )
-                    row = snap.select(
-                        F.max(
-                            F.lpad(
-                                F.col(cfg.seq_col).cast("string"), 128, "0"
-                            )
-                        ).alias("m")
-                    ).collect()[0]
+                    row = snap.select(F.max(pad).alias("m")).collect()[0]
                     self._latest_head = row["m"]
                     self._latest_head_resolved = True
                 if self._latest_head is None:
@@ -234,9 +230,7 @@ class StreamProcessor:
                     stacklevel=3,
                 )
                 return F.lit(True)
-            row = source_snapshot.select(
-                F.max(F.lpad(F.col(cfg.seq_col).cast("string"), 128, "0")).alias("m")
-            ).collect()[0]
+            row = source_snapshot.select(F.max(pad).alias("m")).collect()[0]
             return pad > F.lit(row["m"]) if row["m"] is not None else F.lit(True)
         if isinstance(pos, AtSequenceNumber):
             return pad >= F.lit(pad_seq(pos.sequence_number))
@@ -254,7 +248,7 @@ class StreamProcessor:
         reshard, P7) fall back to the *configured initial position*,
         exactly the reference's per-shard branch — not TrimHorizon."""
         cfg = self.config
-        pad = F.lpad(F.col(cfg.seq_col).cast("string"), 128, "0")
+        pad = seq_order_key(cfg.seq_col)
 
         if cfg.prefer_stored_checkpoint and hasattr(self.store, "all_checkpoints"):
             ckpts = self.store.all_checkpoints()
@@ -289,6 +283,8 @@ class StreamProcessor:
         successes: list[DataFrame] = []
         quarantined: list[DataFrame] = []
         cached: list[DataFrame] = []
+        # K1 fold: max success order key per shard, across attempts
+        positions: dict[str, int | str] = {}
         attempt = 0
         batch_t0 = time.perf_counter()
         n_success = n_failed = n_soft_retries = 0
@@ -298,17 +294,31 @@ class StreamProcessor:
                 out = self.processor(pending).cache()
                 cached.append(out)
                 # ONE action per attempt: the O(shards × outcomes) rollup
-                # both fills the monitoring events and yields the global
-                # outcome counts (src/processor.rs:1490-1525 classifies
-                # per record; the rollup is its batched equivalent)
+                # fills the monitoring events, yields the global outcome
+                # counts and carries each shard's max success sequence
+                # for the checkpoint commit (src/processor.rs:1490-1525
+                # classifies per record; the rollup is its batched
+                # equivalent)
+                seq_key = seq_order_key(
+                    cfg.seq_col, out.schema[cfg.seq_col].dataType
+                )
                 outcome_rows = (
-                    out.groupBy(cfg.shard_col, "outcome").count().collect()
+                    out.groupBy(cfg.shard_col, "outcome")
+                    .agg(
+                        F.count("*").alias("count"),
+                        F.max(seq_key).alias("max_seq"),
+                    )
+                    .collect()
                 )
                 ms = (time.perf_counter() - t0) * 1000
                 totals: dict[str, int] = {}
                 for shard_row in outcome_rows:
                     outcome = shard_row["outcome"]
+                    shard = str(shard_row[cfg.shard_col])
                     totals[outcome] = totals.get(outcome, 0) + shard_row["count"]
+                    if outcome == "success":
+                        m = shard_row["max_seq"]
+                        positions[shard] = max(positions.get(shard, m), m)
                     etype = {
                         "success": M.RECORD_SUCCESS,
                         "soft": M.RECORD_ATTEMPT,
@@ -316,7 +326,7 @@ class StreamProcessor:
                         "timeout": M.RECORD_FAILURE,
                     }[outcome]
                     agg.emit(
-                        str(shard_row[cfg.shard_col]),
+                        shard,
                         etype,
                         count=shard_row["count"],
                         processing_ms=ms,
@@ -383,6 +393,7 @@ class StreamProcessor:
             self._finish_batch(
                 items,
                 quarantined,
+                positions,
                 epoch_id,
                 batch_stats={
                     "t0": batch_t0,
@@ -402,6 +413,7 @@ class StreamProcessor:
         self,
         items: DataFrame | None,
         quarantined: list[DataFrame],
+        positions: dict[str, int | str],
         epoch_id: int,
         batch_stats: dict | None = None,
     ) -> None:
@@ -440,51 +452,24 @@ class StreamProcessor:
             self.dlq_sink(dlq, epoch_id)
 
         # --- checkpoint commit (K1): max success seq per shard ----------
+        # ``positions`` is the fold of the attempt rollups (order keys
+        # from ``seq_order_key``), so the commit runs no Spark job.
         # Save failures retry with backoff rather than failing the batch
         # — the reference's stall-don't-fail semantic ("checkpoint loss
         # is worse than stalling", src/store/dynamodb.rs:137-163) with
         # retry-forever as the default (src/retry/mod.rs:29). Shutdown
         # interrupts the sleep, surfacing ShutdownRequested.
         n_ckpt = 0
-        if items is not None:
+        if positions:
             from .retry import RetryHandle
 
-            # r14 (guide §2.3 — shuffle/aggregate fewer bytes): the
-            # padded-string max built a 128-char string PER ROW (2M
-            # rows ⇒ ~256 MB of transient strings per batch, measured
-            # ~1.4 s of the 7.1 s bench batch) just to make numeric
-            # and string sequence numbers order the same way. When the
-            # sequence column is integral the padding is pure loss:
-            # for non-negative integers, zero-padded lexicographic
-            # order IS numeric order, so max(lpad(x)) == lpad(max(x))
-            # — aggregate natively and render ONE string per shard.
-            # String-typed sequence columns (Kinesis's 128-digit
-            # decimals) keep the padded path unchanged.
-            from pyspark.sql import types as T
-
-            seq_type = items.schema[cfg.seq_col].dataType
-            if isinstance(
-                seq_type,
-                (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-            ):
-                max_seq = F.max(F.col(cfg.seq_col)).cast("string")
-            else:
-                max_seq = F.max(
-                    F.lpad(F.col(cfg.seq_col).cast("string"), 128, "0")
-                )
-            rows = (
-                items.groupBy(cfg.shard_col)
-                .agg(max_seq.alias("max_seq"))
-                .collect()
-            )
             handle = RetryHandle(
                 max_retries=cfg.checkpoint_max_retries,
                 backoff=cfg.backoff,
                 shutdown=self.shutdown,
             )
-            for r in rows:
-                seq = r["max_seq"].lstrip("0") or "0"
-                shard = str(r[cfg.shard_col])
+            for shard, key in positions.items():
+                seq = str(key).lstrip("0") or "0"
 
                 def save(attempt: int, shard: str = shard, seq: str = seq):
                     try:

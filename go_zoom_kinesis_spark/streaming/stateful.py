@@ -13,6 +13,11 @@ expressed as a windowed aggregation (it never expires and must survive
 arbitrarily long gaps). State is partitioned by shard key, so it scales
 horizontally exactly like the reference's one-task-per-shard model
 (SURVEY §2.1 P1).
+
+This is the one running-checkpoint fold: it needs no protobuf (unlike
+``transformWithStateInPandas``), and ``state_inspect`` reads its state
+back. ``stateful_v2.py`` holds only the Spark 4 operators that have no
+equivalent here (event-time timers, MapState/ListState).
 """
 
 from __future__ import annotations

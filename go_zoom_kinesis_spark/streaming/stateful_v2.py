@@ -1,28 +1,15 @@
-"""Custom stateful streaming operator on the Spark 4 native API —
+"""Custom stateful streaming operators on the Spark 4 native API —
 ``transformWithStateInPandas`` (``StatefulProcessor`` + typed state
-handles).
-
-Same semantics as ``stateful.py``'s ``applyInPandasWithState`` version
-(the reference's per-shard mutable state, ShardProcessingState at
-src/processor.rs:1367-1396, folded per batch at
-src/processor.rs:1542-1560): state key = shard_id, value =
-(checkpoint_seq, n_processed, n_batches), checkpoint advances
-monotonically, one update row per shard per micro-batch.
-
-Why both implementations exist: ``applyInPandasWithState`` is the
-stable Spark 3.x surface; ``transformWithStateInPandas`` is the
-Spark 4 replacement with composable typed state (value/list/map) and
-timers — the API a new 100 TB deployment should target. The
-equivalence test (tests/test_streaming_windows.py) pins both to the
-same batch fold, so the engine can swap surfaces without semantic
-drift.
+handles): an event-time TIMER operator (idle-shard eviction) and a
+MapState/ListState operator (per-shard type counts). The per-shard
+running checkpoint fold itself lives once, in ``stateful.py``.
 
 Environment gate: the transformWithState Python worker imports
 ``google.protobuf`` (state-server wire protocol). Where no protobuf
 wheel exists, ``tests/conftest.py`` activates ``vendor/pbshim`` (a
 pure-Python protobuf runtime resolved from the base image, test
-scaffolding only) so the equivalence test RUNS rather than skips;
-``HAS_TWS_DEPS`` is False and the test skips only when neither a
+scaffolding only) so the tests RUN rather than skip;
+``HAS_TWS_DEPS`` is False and they skip only when neither a
 wheel nor the shim is available. Production deployments install
 ``protobuf>=6.33`` — the shim never ships in the library path.
 """
@@ -45,76 +32,6 @@ try:  # the TWS state-server protocol needs protobuf at runtime
     HAS_TWS_DEPS = True
 except ImportError:  # pragma: no cover - environment-dependent
     HAS_TWS_DEPS = False
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("checkpoint_seq", LongType()),
-        StructField("n_processed", LongType()),
-        StructField("n_batches", LongType()),
-    ]
-)
-
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("shard_id", LongType()),
-        StructField("checkpoint_seq", LongType()),
-        StructField("n_processed", LongType()),
-        StructField("n_batches", LongType()),
-    ]
-)
-
-
-class ShardCheckpointProcessor(StatefulProcessor):
-    """Per-shard running checkpoint fold as a typed ValueState."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("shard_ckpt", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator:
-        import pandas as pd
-
-        (shard_id,) = key
-        if self._state.exists():
-            ckpt, n_proc, n_batches = self._state.get()
-        else:
-            ckpt, n_proc, n_batches = -1, 0, 0
-        for pdf in rows:
-            if len(pdf) == 0:
-                continue
-            # monotonic max — the checkpoint only advances
-            ckpt = max(ckpt, int(pdf["event_id"].max()))
-            n_proc += len(pdf)
-        n_batches += 1
-        self._state.update((ckpt, n_proc, n_batches))
-        yield pd.DataFrame(
-            {
-                "shard_id": [shard_id],
-                "checkpoint_seq": [ckpt],
-                "n_processed": [n_proc],
-                "n_batches": [n_batches],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_checkpoint_stream_v2(events: DataFrame) -> DataFrame:
-    """Spark-4-native twin of stateful.running_checkpoint_stream."""
-    # transformWithState requires the RocksDB state store; the default
-    # HDFS-backed provider makes the driver-side schema worker crash
-    events.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    shards = events.withColumn("shard_id", F.col("user_id") % 8)
-    return shards.groupBy("shard_id").transformWithStateInPandas(
-        statefulProcessor=ShardCheckpointProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
 
 
 # --- timer-driven idle-shard eviction -----------------------------------
@@ -225,7 +142,7 @@ TYPECOUNT_OUTPUT_SCHEMA = StructType(
 
 class ShardTypeCountsProcessor(StatefulProcessor):
     """Completes the typed-state trio (``ValueState`` is
-    ``ShardCheckpointProcessor``): a ``MapState`` keyed by event type
+    ``IdleShardEvictionProcessor``): a ``MapState`` keyed by event type
     holds per-(shard, type) running counts — the composable upgrade
     over packing a whole dict into one ValueState row, because one
     type's update doesn't rewrite the others — and a ``ListState``

@@ -22,7 +22,7 @@ _SDK_PB = (
 def _activate_pbshim() -> None:
     """Make ``google.protobuf`` importable in this process AND in the
     PySpark workers the session will spawn, so the
-    ``transformWithStateInPandas`` twin runs instead of skipping.
+    ``transformWithStateInPandas`` tests run instead of skipping.
 
     Mechanism: the shim dir ``vendor/pbshim`` is put on ``sys.path``
     and ``$PYTHONPATH`` BEFORE SparkSession creation; driver and

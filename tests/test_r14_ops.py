@@ -4,7 +4,8 @@ Pins the optimizations' equivalence claims:
 - the checkpoint-commit max over an INTEGRAL sequence column (numeric
   max, rendered once per shard — r14) equals the padded-string max the
   string path still uses, including the "9" vs "10" trap a naive
-  string max would fail;
+  string max would fail; on the string path only successes count,
+  folded across retry attempts;
 - profile_columns' union-of-typed-aggregates equals the r13 unpivot
   form row-for-row.
 """
@@ -21,10 +22,14 @@ from go_zoom_kinesis_spark.streaming import (
 )
 
 
-def _proc(spark, tmp_path, store):
+def _all_success(df):
+    return df.withColumn("outcome", F.lit("success"))
+
+
+def _proc(spark, tmp_path, store, transform=_all_success):
     return StreamProcessor(
         spark,
-        processor=lambda df: df.withColumn("outcome", F.lit("success")),
+        processor=transform,
         store=store,
         config=ProcessorConfig(
             checkpoint_location=str(tmp_path / "ck"),
@@ -47,15 +52,35 @@ def test_checkpoint_numeric_seq_matches_padded_semantics(spark, tmp_path):
 
 def test_checkpoint_string_seq_keeps_padded_path(spark, tmp_path):
     """String-typed sequence numbers (the Kinesis 128-digit decimal
-    case) still order numerically via the padded path."""
-    rows = [("s-0", "9"), ("s-0", "10"), ("s-1", "007"), ("s-1", "8")]
+    case) still order numerically via the padded path, and only
+    successes count: s-0's largest sequence is a hard failure, and
+    s-1's largest is soft on attempt 0 and succeeds on the retry, so
+    its position comes from the second attempt's rollup."""
+    rows = [
+        ("s-0", "9"),
+        ("s-0", "10"),
+        ("s-0", "99"),
+        ("s-1", "007"),
+        ("s-1", "8"),
+        ("s-1", "12"),
+    ]
     df = spark.createDataFrame(
         rows, "shard_id string, sequence_number string"
     )
+
+    def transform(df):
+        seq = F.col("sequence_number")
+        return df.withColumn(
+            "outcome",
+            F.when(seq == "99", "hard")
+            .when((seq == "12") & (F.col("attempt") == 0), "soft")
+            .otherwise("success"),
+        )
+
     store = InMemoryCheckpointStore()
-    _proc(spark, tmp_path, store).run_batch(df)
+    _proc(spark, tmp_path, store, transform).run_batch(df)
     # lstrip("0") canonicalization: "007" -> max("...007","...008")
-    assert store.all_checkpoints() == {"s-0": "10", "s-1": "8"}
+    assert store.all_checkpoints() == {"s-0": "10", "s-1": "12"}
 
 
 def test_profile_columns_equals_unpivot_form(spark, sf_dir):

@@ -116,6 +116,7 @@ def test_json_store_roundtrip_and_prefix(tmp_path):
     # distinct prefixes do not collide
     s2 = JsonFileCheckpointStore(str(tmp_path), key_prefix="app2-")
     assert s2.get_checkpoint("shard-1") is None
+    assert s2.all_checkpoints() == {}
 
 
 # --- processor fixtures -------------------------------------------------

@@ -14,10 +14,7 @@ from pyspark.sql import functions as F
 
 from go_zoom_kinesis_spark.io import load_table
 from go_zoom_kinesis_spark.streaming.stateful import running_checkpoint_stream
-from go_zoom_kinesis_spark.streaming.stateful_v2 import (
-    HAS_TWS_DEPS,
-    running_checkpoint_stream_v2,
-)
+from go_zoom_kinesis_spark.streaming.stateful_v2 import HAS_TWS_DEPS
 from go_zoom_kinesis_spark.streaming.windows import (
     session_metrics,
     sliding_metrics,
@@ -159,45 +156,6 @@ def test_running_checkpoint_state(spark, tmp_path, events_batch, events_stream):
             SELECT *, row_number() OVER (PARTITION BY shard_id
                                          ORDER BY n_batches DESC) rk
             FROM ckpt_state
-        ) WHERE rk = 1
-        """
-    )
-    expected = (
-        events_batch.withColumn("shard_id", F.col("user_id") % 8)
-        .groupBy("shard_id")
-        .agg(
-            F.max("event_id").alias("checkpoint_seq"),
-            F.count("*").alias("n_processed"),
-        )
-    )
-    assert _rows(spark, got) == _rows(spark, expected)
-
-
-@pytest.mark.skipif(
-    not HAS_TWS_DEPS,
-    reason="transformWithState worker needs google.protobuf (absent here)",
-)
-def test_running_checkpoint_state_v2(spark, tmp_path, events_batch, events_stream):
-    """transformWithStateInPandas (Spark 4 native stateful API): final
-    per-shard state must equal the same batch fold as the
-    applyInPandasWithState implementation — the two surfaces are
-    semantically interchangeable."""
-    out = running_checkpoint_stream_v2(events_stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ckpt_state_v2")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck_state_v2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "streaming query did not finish in 120s"
-    got = spark.sql(
-        """
-        SELECT shard_id, checkpoint_seq, n_processed FROM (
-            SELECT *, row_number() OVER (PARTITION BY shard_id
-                                         ORDER BY n_batches DESC) rk
-            FROM ckpt_state_v2
         ) WHERE rk = 1
         """
     )
