@@ -73,23 +73,7 @@ def _normalize_ns_timestamps(df: DataFrame) -> DataFrame:
 _TS_COLUMNS = frozenset({"ts", "o_orderdate", "l_shipdate"})
 
 
-def _fan_out_disabled() -> bool:
-    """Kill switch for the local-layout fan-out (A/B instrument + escape
-    hatch; at production split counts fan_out_narrow is a no-op either
-    way, so this only affects single-file local layouts). Default ON —
-    the driver's bench behavior is unchanged unless explicitly disabled.
-
-    ADVICE r13: parse the value (``0``/``false``/empty keep the fan-out
-    ON) and read it per call, so tests/sessions can toggle it after
-    import."""
-    return os.environ.get("GZK_FAN_OUT_DISABLE", "").strip().lower() not in (
-        "",
-        "0",
-        "false",
-    )
-
-
-def fan_out_narrow(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def fan_out_narrow(df: DataFrame) -> DataFrame:
     """Repartition a narrow scan up to the session's default parallelism
     before a CPU-heavy projection. A single-file parquet table arrives
     as ONE input partition (row-group granularity blocks splitting), so
@@ -97,11 +81,9 @@ def fan_out_narrow(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     shuffling the few raw rows is cheap next to the projection itself.
     Inputs already at ≥ cores partitions pass through untouched — at
     100 TB the scan is thousands of splits and this is a no-op (never a
-    shuffle of the full raw text)."""
-    if _fan_out_disabled():
-        return df
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    shuffle of the full raw text). The target is always the session's
+    default parallelism."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     # metadata-only checks: df.rdd.getNumPartitions() would materialize
     # the RDD conversion path on every call; the input-file count is the
     # same signal (files ≥ cores ⇒ the scan already parallelizes), and

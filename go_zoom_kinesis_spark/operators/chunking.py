@@ -314,14 +314,11 @@ def negative_sampling_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_R8 = {
-    "negative_sampling_unigram": negative_sampling_unigram,
-}
+QUERIES["negative_sampling_unigram"] = negative_sampling_unigram
 
 _NS_TOKS = H.TOKENS_SQL.format(text="text")
 
-ORACLE_R8 = {
-    "negative_sampling_unigram": f"""
+ORACLE["negative_sampling_unigram"] = f"""
         WITH counts AS (
             SELECT tok AS token, count(*) AS c
             FROM (SELECT unnest({_NS_TOKS}) AS tok FROM documents)
@@ -344,8 +341,7 @@ ORACLE_R8 = {
                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                 * {NS_FP}) // total_w AS BIGINT) AS cum_ppm
         FROM weighted CROSS JOIN tot
-    """,
-}
+    """
 
 
 # --- r7-staged, registered at round 8: iterative BPE merge training -------------------
@@ -449,7 +445,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-QUERIES_R8["bpe_train_merges"] = bpe_train_merges
+QUERIES["bpe_train_merges"] = bpe_train_merges
 
 
 def _bpe_ctes() -> str:
@@ -515,7 +511,7 @@ def _bpe_train_oracle_sql() -> str:
     return _bpe_ctes() + "\n" + " UNION ALL ".join(selects)
 
 
-ORACLE_R8["bpe_train_merges"] = _bpe_train_oracle_sql()
+ORACLE["bpe_train_merges"] = _bpe_train_oracle_sql()
 
 
 def tokenizer_apply_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -596,9 +592,9 @@ def tokenizer_apply_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_R8["tokenizer_apply_bpe"] = tokenizer_apply_bpe
+QUERIES["tokenizer_apply_bpe"] = tokenizer_apply_bpe
 
-ORACLE_R8["tokenizer_apply_bpe"] = (
+ORACLE["tokenizer_apply_bpe"] = (
     _bpe_ctes()
     + f""",
     lw AS (
@@ -626,13 +622,3 @@ ORACLE_R8["tokenizer_apply_bpe"] = (
     FROM joined GROUP BY lang
 """
 )
-
-
-# --- round-8 merge (VERDICT r7 task 1) ----------------------------------
-# The r7 registration freeze is over: every staged QUERIES_R8/ORACLE_R8
-# entry joins the registered driver surface and earns CORRECTNESS rows
-# like any other query. The staged dicts are deleted so
-# registry.staged_queries() reports an empty staging area.
-QUERIES.update(QUERIES_R8)
-ORACLE.update(ORACLE_R8)
-del QUERIES_R8, ORACLE_R8

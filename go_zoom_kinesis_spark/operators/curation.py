@@ -700,15 +700,12 @@ def filter_survival_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_R8 = {
-    "filter_survival_sweep": filter_survival_sweep,
-}
+QUERIES["filter_survival_sweep"] = filter_survival_sweep
 
 _SWEEP_TOKS = H.TOKENS_SQL.format(text="text")
 _SWEEP_STOPLIST = "['the','a','of','and','to','is','in']"
 
-ORACLE_R8 = {
-    "filter_survival_sweep": f"""
+ORACLE["filter_survival_sweep"] = f"""
         WITH base AS (
             SELECT len(tk) AS n_tokens,
                    len(list_distinct(tk)) AS n_distinct,
@@ -752,18 +749,7 @@ ORACLE_R8 = {
                     // max(n_tokens_kept) OVER () AS BIGINT)
                    AS token_share_ppm
         FROM kept
-    """,
-}
-
-
-# --- round-8 merge (VERDICT r7 task 1) ----------------------------------
-# The r7 registration freeze is over: every staged QUERIES_R8/ORACLE_R8
-# entry joins the registered driver surface and earns CORRECTNESS rows
-# like any other query. The staged dicts are deleted so
-# registry.staged_queries() reports an empty staging area.
-QUERIES.update(QUERIES_R8)
-ORACLE.update(ORACLE_R8)
-del QUERIES_R8, ORACLE_R8
+    """
 
 
 # --- round 9: DSIR importance weights (hashed n-gram domain selection) ---

@@ -992,7 +992,7 @@ ORACLE["bloom_novelty_filter"] = f"""
 
 
 # --- r7-staged, registered at round 8: 64-bit SimHash Hamming-banded join -------------
-# (registered at the round-8 merge; see the module-end merge block)
+# (registered at the module end, after dedup_two_tier_pipeline)
 
 # r8 widening (VERDICT r7 task 2): the r7 64-bit / 4×16-bit-band form
 # went super-linear on the fifth decade (12.77×/decade at sf100 — band
@@ -1149,10 +1149,6 @@ simhash_hamming_join.__doc__ = simhash_hamming_join.__doc__.format(
 )
 
 
-QUERIES_R8 = {
-    "simhash_hamming_join": simhash_hamming_join,
-}
-
 _VW_COLS = ",\n                   ".join(
     f"sum((thash * {SIMW_A[j]} + {SIMW_B[j]}) % {H.P} % 2 * 2 - 1) AS v{j}"
     for j in range(SIMW_BITS)
@@ -1170,8 +1166,7 @@ _HAMW = " + ".join(
     f"bit_count(xor(x.b{k}, y.b{k}))" for k in range(SIMW_BANDS)
 )
 
-ORACLE_R8 = {
-    "simhash_hamming_join": f"""
+ORACLE["simhash_hamming_join"] = f"""
         WITH tk AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
         th AS (
             SELECT DISTINCT doc_id,
@@ -1202,8 +1197,7 @@ ORACLE_R8 = {
         )
         SELECT doc_a, doc_b, hamming FROM pairs
         WHERE hamming <= {SIMW_HAMMING_MAX}
-    """,
-}
+    """
 
 
 # --- r7-staged, registered at round 8: incremental dedup (new batch vs corpus) ---------
@@ -1255,9 +1249,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_R8["dedup_incremental_lsh"] = dedup_incremental_lsh
-
-ORACLE_R8["dedup_incremental_lsh"] = f"""
+ORACLE["dedup_incremental_lsh"] = f"""
     {_SH_CTES},
     sig AS (
         SELECT doc_id, {_MH_COLS}
@@ -1493,9 +1485,7 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_R8["lsh_recall_audit"] = lsh_recall_audit
-
-ORACLE_R8["lsh_recall_audit"] = f"""
+ORACLE["lsh_recall_audit"] = f"""
     WITH tk AS (
         SELECT doc_id, {_TOKS} AS toks FROM documents
         WHERE doc_id % {RECALL_AUDIT_MOD} = {RECALL_AUDIT_SLOT}
@@ -1734,11 +1724,8 @@ ORACLE["dedup_two_tier_pipeline"] = f"""
 """
 
 
-# --- round-8 merge (VERDICT r7 task 1) ----------------------------------
-# The r7 registration freeze is over: every staged QUERIES_R8/ORACLE_R8
-# entry joins the registered driver surface and earns CORRECTNESS rows
-# like any other query. The staged dicts are deleted so
-# registry.staged_queries() reports an empty staging area.
-QUERIES.update(QUERIES_R8)
-ORACLE.update(ORACLE_R8)
-del QUERIES_R8, ORACLE_R8
+# The round-8 cohort registers after dedup_two_tier_pipeline: module
+# order breaks ties in the registry's verdict-window ordering.
+QUERIES["simhash_hamming_join"] = simhash_hamming_join
+QUERIES["dedup_incremental_lsh"] = dedup_incremental_lsh
+QUERIES["lsh_recall_audit"] = lsh_recall_audit

@@ -1001,12 +1001,9 @@ def duplicate_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_R8 = {
-    "duplicate_span_scrub": duplicate_span_scrub,
-}
+QUERIES["duplicate_span_scrub"] = duplicate_span_scrub
 
-ORACLE_R8 = {
-    "duplicate_span_scrub": f"""
+ORACLE["duplicate_span_scrub"] = f"""
         WITH pre AS (
             SELECT doc_id,
                    list_transform({_TOKENS}, s -> {_CHASH}) AS th
@@ -1067,15 +1064,4 @@ ORACLE_R8 = {
                nrem * {SPAN_N} AS tokens_removed,
                n_tokens - nrem * {SPAN_N} AS surviving_tokens
         FROM folded
-    """,
-}
-
-
-# --- round-8 merge (VERDICT r7 task 1) ----------------------------------
-# The r7 registration freeze is over: every staged QUERIES_R8/ORACLE_R8
-# entry joins the registered driver surface and earns CORRECTNESS rows
-# like any other query. The staged dicts are deleted so
-# registry.staged_queries() reports an empty staging area.
-QUERIES.update(QUERIES_R8)
-ORACLE.update(ORACLE_R8)
-del QUERIES_R8, ORACLE_R8
+    """

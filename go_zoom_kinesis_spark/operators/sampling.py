@@ -573,15 +573,12 @@ def domain_frequency_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_R8 = {
-    "domain_frequency_cap": domain_frequency_cap,
-}
+QUERIES["domain_frequency_cap"] = domain_frequency_cap
 
 # oracle: the naive per-domain rank formulation — any tie-break among
 # equal n_chars keeps the same counts and char sums, so row_number's
 # arbitrary order within ties cannot diverge from the bucket math
-ORACLE_R8 = {
-    "domain_frequency_cap": f"""
+ORACLE["domain_frequency_cap"] = f"""
         WITH ranked AS (
             SELECT source, n_chars,
                    row_number() OVER (PARTITION BY source
@@ -599,8 +596,7 @@ ORACLE_R8 = {
                CAST(sum(CASE WHEN rk <= {DOMAIN_CAP} THEN n_chars
                              ELSE 0 END) AS BIGINT) AS kept_chars
         FROM ranked GROUP BY source
-    """,
-}
+    """
 
 
 # --- r7-staged, registered at round 8: purged time-series CV folds ----------------------
@@ -707,9 +703,9 @@ def purged_timefold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_R8["purged_timefold_assign"] = purged_timefold_assign
+QUERIES["purged_timefold_assign"] = purged_timefold_assign
 
-ORACLE_R8["purged_timefold_assign"] = f"""
+ORACLE["purged_timefold_assign"] = f"""
     WITH hb AS (
         SELECT epoch_us(ts) // {_HOUR_US} AS hour, count(*) AS cnt
         FROM events GROUP BY 1
@@ -744,13 +740,3 @@ ORACLE_R8["purged_timefold_assign"] = f"""
            t.n_total - f.n_test - coalesce(e.n_embargo, 0) AS n_train
     FROM fr f LEFT JOIN emb e ON e.fold = f.fold, tot t
 """
-
-
-# --- round-8 merge (VERDICT r7 task 1) ----------------------------------
-# The r7 registration freeze is over: every staged QUERIES_R8/ORACLE_R8
-# entry joins the registered driver surface and earns CORRECTNESS rows
-# like any other query. The staged dicts are deleted so
-# registry.staged_queries() reports an empty staging area.
-QUERIES.update(QUERIES_R8)
-ORACLE.update(ORACLE_R8)
-del QUERIES_R8, ORACLE_R8

@@ -1587,12 +1587,9 @@ def retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_R8 = {
-    "retrieval_mrr_eval": retrieval_mrr_eval,
-}
+QUERIES["retrieval_mrr_eval"] = retrieval_mrr_eval
 
-ORACLE_R8 = {
-    "retrieval_mrr_eval": f"""
+ORACLE["retrieval_mrr_eval"] = f"""
         WITH truth1 AS (
             SELECT q_id, vec_id AS rel_vec
             FROM ({ORACLE["similarity_topk"]}) t
@@ -1610,18 +1607,7 @@ ORACLE_R8 = {
                         0) AS rr_ppm
         FROM truth1 t
         LEFT JOIN approx a ON a.q_id = t.q_id AND a.rel_vec = t.rel_vec
-    """,
-}
-
-
-# --- round-8 merge (VERDICT r7 task 1) ----------------------------------
-# The r7 registration freeze is over: every staged QUERIES_R8/ORACLE_R8
-# entry joins the registered driver surface and earns CORRECTNESS rows
-# like any other query. The staged dicts are deleted so
-# registry.staged_queries() reports an empty staging area.
-QUERIES.update(QUERIES_R8)
-ORACLE.update(ORACLE_R8)
-del QUERIES_R8, ORACLE_R8
+    """
 
 
 # --- round 8: k-center coreset (Gonzalez greedy) -------------------------

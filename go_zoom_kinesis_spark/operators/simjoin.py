@@ -49,16 +49,6 @@ THETA_NUM = 1
 THETA_DEN = 2
 
 
-def _shingle_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-file scans arrive as ONE partition; shingling is the
-    # CPU-heavy projection fan_out_narrow exists for (io.py)
-    docs = fan_out_narrow(load_table(spark, sf_dir, "documents"))
-    return docs.select(
-        "doc_id",
-        F.explode(H.shingles_col(H.tokens_col(F.col("text")))).alias("sh"),
-    )
-
-
 def _shingle_arr_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compact per-doc distinct-shingle arrays — ONE row per document.
 
@@ -83,60 +73,36 @@ def _shingle_arr_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def similarity_prefix_join(
-    spark: SparkSession, sf_dir: str, verify: str = "local"
-) -> DataFrame:
-    """``verify`` selects the dictionary-build strategy for the exact
-    verification stage (r12, VERDICT r11 #5 — both paths are pinned
-    result-equal in tests/test_r12_ops.py):
-
-    - ``"local"`` (default, registered): the whole-corpus dictionary,
-      r13 shape — the compact per-doc shingle-array relation is pinned
-      once and feeds BOTH the prefix chain and the verify joins (one
-      shingling pass per execution instead of three; A/B table in
-      OPTIMIZATION_r13.md).
-    - ``"pruned"``: the cluster shape — checkpoint the candidate
-      list, derive its doc-id set, and rebuild the dictionary as a
-      broadcast LEFT-SEMI prune of the source scan shingled IN-ROW
-      (no explode, no corpus-scale dictionary): verify cost is
-      ∝ candidates by construction instead of by optimizer grace.
-      Locally ~7.4 s (the distinct + broadcast-build + extra scan are
-      pure scheduling overhead at sf0.1), but the only shape whose
-      verify stage cannot regress to corpus-scale on a 1000-executor
-      cluster where the AQE broadcast threshold or plan shape may
-      differ.
-    """
-    if verify not in ("local", "pruned"):
-        raise ValueError(f"verify={verify!r} not in ('local', 'pruned')")
-    # r13 (guide §2.3/§2.4): in the registered "local" shape the
-    # corpus shingles ONCE — the compact per-doc array relation is
-    # pinned and both the ranked/prefix chain (via explode of the
-    # pinned arrays) and the verification dictionary read it back. The
-    # r12 shape ran the interpreted shingling HOF three times per
-    # execution (once under the prefix pin, once per verify-join side:
-    # the dictionary subtree appeared twice in the physical plan with
-    # no exchange reuse — plans/r13/similarity_prefix_join_before.txt)
-    # and paid a collect_list re-group the array relation IS. What the
-    # r11 A/B rejected was pinning the EXPLODED stream (one row per
-    # shingle, read back thrice: 0.9 -> 3.7 s); the compact form is
-    # |docs| rows and replaces HOF re-execution, not cheap scans.
-    # "pruned" keeps the r12 cluster shape end-to-end unchanged.
-    if verify == "local":
-        # r14 (VERDICT r13 #4, guide §5): this pin is CORPUS-scale —
-        # one row per document carrying the full shingle array ≈ the
-        # tokenized corpus. Deserialized default blocks inflate each
-        # array into boxed objects and re-promote disk reads back into
-        # memory (the SCALE.md r12 OOM path); a serialized
-        # memory+disk level keeps the blocks compact and evictable.
-        # (PySpark's MEMORY_AND_DISK constant is the serialized level —
-        # deserialized=False — unlike the JVM default.)
-        arrs_full = pin(
-            _shingle_arr_rel(spark, sf_dir),
-            storage_level=StorageLevel.MEMORY_AND_DISK,
-        )
-        sh = arrs_full.select("doc_id", F.explode("arr").alias("sh"))
-    else:
-        sh = _shingle_rel(spark, sf_dir)
+def similarity_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Verification uses the whole-corpus dictionary, r13 shape: the
+    compact per-doc shingle-array relation is pinned once and feeds
+    BOTH the prefix chain and the verify joins (one shingling pass per
+    execution instead of three; A/B table in OPTIMIZATION_r13.md)."""
+    # r13 (guide §2.3/§2.4): the corpus shingles ONCE — the compact
+    # per-doc array relation is pinned and both the ranked/prefix chain
+    # (via explode of the pinned arrays) and the verification
+    # dictionary read it back. The r12 shape ran the interpreted
+    # shingling HOF three times per execution (once under the prefix
+    # pin, once per verify-join side: the dictionary subtree appeared
+    # twice in the physical plan with no exchange reuse —
+    # plans/r13/similarity_prefix_join_before.txt) and paid a
+    # collect_list re-group the array relation IS. What the r11 A/B
+    # rejected was pinning the EXPLODED stream (one row per shingle,
+    # read back thrice: 0.9 -> 3.7 s); the compact form is |docs| rows
+    # and replaces HOF re-execution, not cheap scans.
+    #
+    # r14 (VERDICT r13 #4, guide §5): this pin is CORPUS-scale — one
+    # row per document carrying the full shingle array ≈ the tokenized
+    # corpus. Deserialized default blocks inflate each array into boxed
+    # objects and re-promote disk reads back into memory (the SCALE.md
+    # r12 OOM path); a serialized memory+disk level keeps the blocks
+    # compact and evictable. (PySpark's MEMORY_AND_DISK constant is the
+    # serialized level — deserialized=False — unlike the JVM default.)
+    arrs = pin(
+        _shingle_arr_rel(spark, sf_dir),
+        storage_level=StorageLevel.MEMORY_AND_DISK,
+    )
+    sh = arrs.select("doc_id", F.explode("arr").alias("sh"))
     # df and sz as window counts over the SAME relation — two
     # exchanges total (one per partition key) instead of two
     # groupBy-aggregate shuffles plus their joins back
@@ -194,55 +160,28 @@ def similarity_prefix_join(
         .select("a_id", "b_id")
         .distinct()
     )
-    if verify == "local":
-        # r13 (guide §2.5 flavor of the one-partition hazard): the
-        # candidate relation is ~125k rows at sf0.1 but only ~2 MB, so
-        # AQE coalesces the post-distinct exchange to ONE partition —
-        # and with the dictionary broadcast (pinned arrs have exact
-        # stats), every downstream stage inherits that single
-        # partition, one-coring the array_intersect verification
-        # (~3.7 s of CPU in one task; 2.50 -> 0.75 s isolated when
-        # spread). Partition-count coalescing tracks BYTES, not CPU
-        # cost — re-spread the cheap rows before the expensive
-        # projection. Scale-adaptive: defaultParallelism, not a
-        # constant; hash on a_id so the layout is deterministic.
-        cand = cand.repartition(
-            spark.sparkContext.defaultParallelism, "a_id"
-        )
+    # r13 (guide §2.5 flavor of the one-partition hazard): the
+    # candidate relation is ~125k rows at sf0.1 but only ~2 MB, so AQE
+    # coalesces the post-distinct exchange to ONE partition — and with
+    # the dictionary broadcast (pinned arrs have exact stats), every
+    # downstream stage inherits that single partition, one-coring the
+    # array_intersect verification (~3.7 s of CPU in one task; 2.50 ->
+    # 0.75 s isolated when spread). Partition-count coalescing tracks
+    # BYTES, not CPU cost — re-spread the cheap rows before the
+    # expensive projection. Scale-adaptive: defaultParallelism, not a
+    # constant; hash on a_id so the layout is deterministic.
+    cand = cand.repartition(spark.sparkContext.defaultParallelism, "a_id")
     # verification without the pair×shingle blow-up: candidates join
     # each side's COMPACT shingle array by doc key, and the exact
     # intersection runs in-row (array_intersect, JVM hash set) — the
     # explode-and-regroup form shuffles |cand|·|set| rows where this
     # shuffles |cand| rows carrying bounded arrays. Same shape at
     # 100 TB: two equi-joins keyed on doc_id, nothing pairwise beyond
-    # the surviving candidates.
-    if verify == "pruned":
-        # cluster shape: candidate list pinned (tiny), its doc-id set
-        # broadcast-semi-prunes the SOURCE scan, and each surviving
-        # doc shingles in-row — the dictionary never exceeds
-        # O(candidate docs) rows and no corpus explode exists in the
-        # verify stage at all (the _pair_jaccard semi-join discipline)
-        cand = pin(cand)
-        ids = (
-            cand.select(F.col("a_id").alias("doc_id"))
-            .union(cand.select(F.col("b_id").alias("doc_id")))
-            .distinct()
-        )
-        docs = fan_out_narrow(load_table(spark, sf_dir, "documents"))
-        arrs = docs.join(F.broadcast(ids), "doc_id", "left_semi").select(
-            "doc_id",
-            H.shingles_col(H.tokens_col(F.col("text"))).alias("arr"),
-        )
-    else:
-        # r13: the dictionary IS the pinned compact array relation —
-        # no second shingling pass, no collect_list re-group, and the
-        # two verify-join sides replay pinned blocks instead of each
-        # re-running scan→HOF→explode→ObjectHashAggregate (the r12
-        # plan's duplicated subtree). Content and per-doc array order
-        # are identical to the old explode+collect_list build (each
-        # doc's shingles live in one row, so the re-group preserved
-        # array order).
-        arrs = arrs_full
+    # the surviving candidates. The dictionary IS the pinned compact
+    # array relation — no second shingling pass, no collect_list
+    # re-group, and the two verify-join sides replay pinned blocks
+    # instead of each re-running scan→HOF→explode→ObjectHashAggregate
+    # (the r12 plan's duplicated subtree).
     inter = (
         cand.join(
             arrs.select(F.col("doc_id").alias("a_id"), F.col("arr").alias("a_arr")),

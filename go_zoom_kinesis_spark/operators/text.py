@@ -526,12 +526,9 @@ def feature_hash_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_R8 = {
-    "feature_hash_vectorize": feature_hash_vectorize,
-}
+QUERIES["feature_hash_vectorize"] = feature_hash_vectorize
 
-ORACLE_R8 = {
-    "feature_hash_vectorize": f"""
+ORACLE["feature_hash_vectorize"] = f"""
         WITH th AS (
             SELECT doc_id,
                    {H.CHAR_HASH_SQL.format(s="tok")} AS h
@@ -549,8 +546,7 @@ ORACLE_R8 = {
                CAST(sum(v * v) AS BIGINT) AS sq_norm,
                CAST(sum((dim + 1) * v) AS BIGINT) AS dim_checksum
         FROM cell GROUP BY doc_id
-    """,
-}
+    """
 
 
 # --- r7-staged, registered at round 8: winnowing fingerprint overlap ------------------
@@ -649,9 +645,9 @@ def winnow_fingerprint_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_R8["winnow_fingerprint_overlap"] = winnow_fingerprint_overlap
+QUERIES["winnow_fingerprint_overlap"] = winnow_fingerprint_overlap
 
-ORACLE_R8["winnow_fingerprint_overlap"] = f"""
+ORACLE["winnow_fingerprint_overlap"] = f"""
     WITH pre AS (
         SELECT doc_id,
                list_transform({_TOKS}, s -> {H.CHAR_HASH_SQL.format(s="s")})
@@ -691,13 +687,3 @@ ORACLE_R8["winnow_fingerprint_overlap"] = f"""
       ON a.fp = b.fp AND a.doc_id < b.doc_id
     GROUP BY 1, 2 HAVING count(*) >= {WINNOW_MIN_SHARED}
 """
-
-
-# --- round-8 merge (VERDICT r7 task 1) ----------------------------------
-# The r7 registration freeze is over: every staged QUERIES_R8/ORACLE_R8
-# entry joins the registered driver surface and earns CORRECTNESS rows
-# like any other query. The staged dicts are deleted so
-# registry.staged_queries() reports an empty staging area.
-QUERIES.update(QUERIES_R8)
-ORACLE.update(ORACLE_R8)
-del QUERIES_R8, ORACLE_R8

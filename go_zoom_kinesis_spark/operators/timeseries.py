@@ -1112,7 +1112,6 @@ ORACLE = {
 
 
 # --- r7-staged, registered at round 8: linear-interpolation gap fill ------------------
-# (registered at the round-8 merge; see the module-end merge block)
 
 
 def ts_linear_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1207,12 +1206,9 @@ def ts_linear_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_R8 = {
-    "ts_linear_interpolate": ts_linear_interpolate,
-}
+QUERIES["ts_linear_interpolate"] = ts_linear_interpolate
 
-ORACLE_R8 = {
-    "ts_linear_interpolate": """
+ORACLE["ts_linear_interpolate"] = """
         WITH per_hour AS (
             SELECT event_type, date_trunc('hour', ts) AS bucket_hour,
                    count(*) AS n_events,
@@ -1277,18 +1273,7 @@ ORACLE_R8 = {
                (cents IS NULL AND pv IS NOT NULL AND nv IS NOT NULL)
                    AS interpolated
         FROM neigh
-    """,
-}
-
-
-# --- round-8 merge (VERDICT r7 task 1) ----------------------------------
-# The r7 registration freeze is over: every staged QUERIES_R8/ORACLE_R8
-# entry joins the registered driver surface and earns CORRECTNESS rows
-# like any other query. The staged dicts are deleted so
-# registry.staged_queries() reports an empty staging area.
-QUERIES.update(QUERIES_R8)
-ORACLE.update(ORACLE_R8)
-del QUERIES_R8, ORACLE_R8
+    """
 
 
 # --- round 9: additive seasonal decomposition ----------------------------

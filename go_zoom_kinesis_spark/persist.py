@@ -17,10 +17,10 @@ conf:
   lineage truncated. The measured-best local shape (SCALE.md r11
   persist sweep); single-JVM ``local[*]`` has no executor-loss mode,
   so the lost fault tolerance is unreachable here anyway.
-- ``cache`` — ``persist(MEMORY_AND_DISK)``: lineage kept, so executor
-  loss recomputes (fault-tolerant) — but blocks are CacheManager
-  strong refs that outlive the query unless explicitly unpersisted,
-  and an eager pin costs an extra materializing action.
+- ``cache`` — ``persist(MEMORY_AND_DISK_DESER)``: lineage kept, so
+  executor loss recomputes (fault-tolerant) — but blocks are
+  CacheManager strong refs that outlive the query unless explicitly
+  unpersisted, and each pin costs an extra materializing action.
 - ``checkpoint`` — RELIABLE ``DataFrame.checkpoint``: blocks written
   to ``spark.gzk.persist.checkpointDir`` (HDFS/S3 on a real cluster),
   surviving executor loss AND truncating lineage — the
@@ -29,9 +29,12 @@ conf:
   otherwise each be a single point of failure. Costs a distributed
   write per pin.
 
-``eager`` mirrors ``localCheckpoint(eager=)``: the call materializes
-before returning. Iterative operators rely on that for plan-size and
-timing control; ``cache`` emulates it with a ``count()`` action.
+Every pin is eager, like ``localCheckpoint(eager=True)``: the call
+materializes before returning. Iterative operators rely on that for
+plan-size and timing control; ``cache`` emulates it with a
+``count()`` action. With no ``storage_level``, ``localCheckpoint``
+and ``cache`` store the same memory-deserialized blocks, so choosing
+between them changes durability, not block format.
 
 Kept out of ``io.py`` on purpose: loaders stay dumb (no persistence),
 and operators import one verb, not a strategy matrix.
@@ -47,7 +50,7 @@ CHECKPOINT_DIR_CONF = "spark.gzk.persist.checkpointDir"
 _VALID = ("localCheckpoint", "cache", "checkpoint")
 
 
-def pin(df: DataFrame, eager: bool = True, storage_level=None) -> DataFrame:
+def pin(df: DataFrame, storage_level=None) -> DataFrame:
     """Materialize-and-pin ``df`` per the session's persist strategy.
 
     Chain-friendly: ``df.transform(pin)`` inside a builder chain, or
@@ -68,13 +71,12 @@ def pin(df: DataFrame, eager: bool = True, storage_level=None) -> DataFrame:
     spark = df.sparkSession
     strategy = spark.conf.get(STRATEGY_CONF, "localCheckpoint")
     if strategy == "localCheckpoint":
-        return df.localCheckpoint(eager=eager, storageLevel=storage_level)
+        return df.localCheckpoint(eager=True, storageLevel=storage_level)
     if strategy == "cache":
         from pyspark import StorageLevel
 
-        out = df.persist(storage_level or StorageLevel.MEMORY_AND_DISK)
-        if eager:
-            out.count()
+        out = df.persist(storage_level or StorageLevel.MEMORY_AND_DISK_DESER)
+        out.count()
         return out
     if strategy == "checkpoint":
         sc = spark.sparkContext
@@ -87,7 +89,7 @@ def pin(df: DataFrame, eager: bool = True, storage_level=None) -> DataFrame:
                     "cluster) or call sparkContext.setCheckpointDir first"
                 )
             sc.setCheckpointDir(ckdir)
-        return df.checkpoint(eager=eager)
+        return df.checkpoint(eager=True)
     raise ValueError(
         f"{STRATEGY_CONF}={strategy!r} not in {_VALID}"
     )
@@ -117,9 +119,3 @@ def unpin(df: DataFrame) -> None:
     if strategy == "cache":
         df.unpersist(blocking=False)
 
-
-def pin_lazy(df: DataFrame) -> DataFrame:
-    """:func:`pin` with ``eager=False`` — chain-friendly for
-    ``df.transform(pin_lazy)`` (``transform`` can't forward kwargs on
-    older PySpark)."""
-    return pin(df, eager=False)

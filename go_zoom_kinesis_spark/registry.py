@@ -258,35 +258,3 @@ def all_oracle_sql() -> dict[str, str]:
     }
     return {n: out[n] for n in _prioritize(qnames) if n in out}
 
-
-# --- round-8 staging area ----------------------------------------------
-#
-# Operators finished during the round-7 registration freeze live in
-# per-module QUERIES_R8/ORACLE_R8 dicts. They are fully implemented,
-# oracled, and tested (tests/test_staged_r8.py runs the same parity
-# gate), but are NOT part of all_queries()/all_oracle_sql() until the
-# round-8 merge — the r7 driver window stays on tier-3 re-checks as
-# committed. To merge at round 8: move each QUERIES_R8/ORACLE_R8 entry
-# into the module's QUERIES/ORACLE dicts (or fold these collectors into
-# all_queries()).
-
-
-def staged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    registered = {
-        name for mod in _modules() for name in getattr(mod, "QUERIES", {})
-    }
-    for mod in _modules():
-        for name, fn in getattr(mod, "QUERIES_R8", {}).items():
-            if name in out or name in registered:
-                raise ValueError(f"duplicate staged query name {name!r}")
-            out[name] = _wrap(fn)
-    return out
-
-
-def staged_oracle_sql() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for mod in _modules():
-        for name, sql in getattr(mod, "ORACLE_R8", {}).items():
-            out[name] = sql
-    return out

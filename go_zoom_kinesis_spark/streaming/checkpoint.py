@@ -26,6 +26,7 @@ import os
 import tempfile
 import threading
 from typing import Protocol
+from urllib.parse import quote
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -91,7 +92,10 @@ class JsonFileCheckpointStore:
         os.makedirs(root, exist_ok=True)
 
     def _path(self, shard_id: str) -> str:
-        safe = f"{self.key_prefix}{shard_id}".replace("/", "_")
+        # percent-encoding is reversible, so distinct ids (``x/y`` and
+        # ``x_y``) get distinct files; names made of ``[A-Za-z0-9_.~-]``
+        # are left as they are
+        safe = quote(f"{self.key_prefix}{shard_id}", safe="")
         return os.path.join(self.root, f"{safe}.json")
 
     def get_checkpoint(self, shard_id: str) -> str | None:

@@ -10,7 +10,8 @@ job). These tests pin:
   pins at every tier (minhash bands + candidate dict),
 - the default (no conf set) stays ``localCheckpoint`` — the measured
   local shape every bench number was taken under,
-- strategy plumbing: ``cache`` leaves an InMemoryRelation in the plan,
+- strategy plumbing: ``cache`` leaves an InMemoryRelation in the plan
+  and, with no level given, deserialized blocks like localCheckpoint,
   ``checkpoint`` writes RDD files under the configured reliable dir
   and fails LOUDLY when no dir is configured (silently falling back
   to a non-durable store would defeat the knob's purpose),
@@ -22,6 +23,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark import StorageLevel
 
 from go_zoom_kinesis_spark.persist import (
     CHECKPOINT_DIR_CONF,
@@ -87,6 +89,8 @@ def test_cache_strategy_uses_cachemanager(strategy_conf):
     df = spark.range(8).transform(pin)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "InMemoryRelation" in plan
+    # the block format of localCheckpoint's default: deserialized
+    assert df.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
     assert df.count() == 8
     df.unpersist()
 

@@ -91,30 +91,6 @@ def test_star_autosizing_restores_conf_on_cap_failure(spark, monkeypatch):
     assert spark.conf.get("spark.sql.shuffle.partitions") == old
 
 
-# --- similarity_prefix_join: verify-strategy knob (VERDICT r11 #5) ---------
-
-
-def test_prefix_join_pruned_verify_equals_local(spark):
-    """The cluster-shape verify (broadcast left-semi prune of the
-    source scan, in-row shingling) must return exactly the registered
-    local shape's rows — and its plan must actually contain the
-    broadcast semi prune (executable cluster shape, not prose)."""
-    from go_zoom_kinesis_spark.operators.simjoin import (
-        similarity_prefix_join,
-    )
-
-    local = similarity_prefix_join(spark, SF_DIR)
-    pruned = similarity_prefix_join(spark, SF_DIR, verify="pruned")
-    assert sorted(map(tuple, local.collect())) == sorted(
-        map(tuple, pruned.collect())
-    )
-    plan = pruned._jdf.queryExecution().optimizedPlan().toString()
-    assert "LeftSemi" in plan
-
-    with pytest.raises(ValueError, match="verify"):
-        similarity_prefix_join(spark, SF_DIR, verify="bogus")
-
-
 # --- containment join: lazy persist shape (ADVICE r11 #1) ------------------
 
 

@@ -1,7 +1,6 @@
-"""The round-7 staging cohort, now REGISTERED (round-8 merge): the 14
-operators finished during the r7 registration freeze keep their oracle
-parity gate and pure-Python referees here, running against the
-registered surface they merged into.
+"""The round-8 cohort: pure-Python referees and plan pins for the 14
+operators registered at round 8. Their oracle parity runs with every
+other registered query in ``test_oracle_parity.py``.
 """
 
 from __future__ import annotations
@@ -9,15 +8,12 @@ from __future__ import annotations
 import math
 from collections import Counter
 
-import pytest
-
 from go_zoom_kinesis_spark import registry
 from go_zoom_kinesis_spark.io import load_table
-from tests.util import assert_matches_oracle, duck_connection
 
 P = 2_147_483_647
 
-# the r7 staging cohort, merged into the registered surface at round 8
+# the round-8 cohort
 R8_NAMES = (
     "simhash_hamming_join",
     "duplicate_span_scrub",
@@ -35,16 +31,7 @@ R8_NAMES = (
     "purged_timefold_assign",
 )
 _ALL_Q = registry.all_queries()
-_ALL_O = registry.all_oracle_sql()
-STAGED_Q = {n: _ALL_Q[n] for n in R8_NAMES}
-STAGED_O = {n: _ALL_O[n] for n in R8_NAMES}
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duck_connection(sf_dir)
-    yield con
-    con.close()
+R8_Q = {n: _ALL_Q[n] for n in R8_NAMES}
 
 
 def _py_tokens(text):
@@ -58,26 +45,13 @@ def _py_char_hash(s):
     return h
 
 
-# --- the same gate the registered surface gets ---------------------------
-
-
-def test_r8_cohort_registered_and_staging_area_empty():
-    """The round-8 merge happened: every cohort name is on the live
-    driver surface (queries + oracle) and nothing is left staged."""
+def test_r8_cohort_registered():
+    """Every cohort name is registered in ``__spark_entry__``'s
+    queries and oracle SQL."""
     import __spark_entry__ as entrymod
 
-    live_q = entrymod.queries()
-    live_o = entrymod.oracle_sql()
-    assert set(R8_NAMES) <= set(live_q)
-    assert set(R8_NAMES) <= set(live_o)
-    assert not registry.staged_queries()
-    assert not registry.staged_oracle_sql()
-
-
-@pytest.mark.parametrize("name", sorted(STAGED_Q))
-def test_staged_matches_oracle(spark, sf_dir, duck, name):
-    df = STAGED_Q[name](spark, sf_dir)
-    assert_matches_oracle(df, duck, STAGED_O[name], name)
+    assert set(R8_NAMES) <= set(entrymod.queries())
+    assert set(R8_NAMES) <= set(entrymod.oracle_sql())
 
 
 # --- simhash_hamming_join: pigeonhole no-false-negatives -----------------
@@ -400,20 +374,20 @@ def test_duck_list_reduce_conditional_hazard():
     con.close()
 
 
-# --- plan pins: the staged operators must ship 100 TB-shaped plans -------
+# --- plan pins: the r8 operators must ship 100 TB-shaped plans -------
 
 
 def _plan(spark, sf_dir, name):
     return (
-        STAGED_Q[name](spark, sf_dir)
+        R8_Q[name](spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
 
 
-def test_staged_plans_no_cartesian(spark, sf_dir):
-    for name in sorted(STAGED_Q):
+def test_r8_plans_no_cartesian(spark, sf_dir):
+    for name in sorted(R8_Q):
         assert "CartesianProduct" not in _plan(spark, sf_dir, name), name
 
 
@@ -787,7 +761,7 @@ def test_lsh_recall_audit_referee(spark, sf_dir):
             for j in range(i + 1, len(ds)):
                 cand.add((ds[i], ds[j]))
     hits = truth & cand
-    [row] = STAGED_Q["lsh_recall_audit"](spark, sf_dir).collect()
+    [row] = R8_Q["lsh_recall_audit"](spark, sf_dir).collect()
     assert row["n_true_pairs"] == len(truth)
     assert row["n_lsh_candidates"] == len(cand)
     assert row["n_hits"] == len(hits)
@@ -835,7 +809,7 @@ def test_filter_survival_sweep_referee(spark, sf_dir):
             kd * 1_000_000 // tot_docs,
             kt * 1_000_000 // tot_tokens,
         )
-    rows = STAGED_Q["filter_survival_sweep"](spark, sf_dir).collect()
+    rows = R8_Q["filter_survival_sweep"](spark, sf_dir).collect()
     assert len(rows) == len(SWEEP_THRESHOLDS)
     for r in rows:
         e = expected[r["threshold_ppm"]]
@@ -901,7 +875,7 @@ def test_purged_timefold_referee(spark, sf_dir):
             or (h1 < h <= h1 + TIMEFOLD_EMBARGO_HOURS)
         )
         expected[f] = (h0, h1, n_test, n_emb, total - n_test - n_emb)
-    out = STAGED_Q["purged_timefold_assign"](spark, sf_dir).collect()
+    out = R8_Q["purged_timefold_assign"](spark, sf_dir).collect()
     assert len(out) == len(expected)
     for r in out:
         e = expected[r["fold"]]

@@ -117,6 +117,11 @@ def test_json_store_roundtrip_and_prefix(tmp_path):
     s2 = JsonFileCheckpointStore(str(tmp_path), key_prefix="app2-")
     assert s2.get_checkpoint("shard-1") is None
     assert s2.all_checkpoints() == {}
+    # shard ids that differ only in "/" vs "_" keep separate files
+    s2.save_checkpoint("x/y", "1")
+    s2.save_checkpoint("x_y", "2")
+    assert (s2.get_checkpoint("x/y"), s2.get_checkpoint("x_y")) == ("1", "2")
+    assert s2.all_checkpoints() == {"x/y": "1", "x_y": "2"}
 
 
 # --- processor fixtures -------------------------------------------------

@@ -175,13 +175,6 @@ def main() -> None:
         help="non-ASCII document vocabulary; byte-level multimodal "
         "queries are excluded (their oracles are ASCII-contracted)",
     )
-    ap.add_argument(
-        "--staged",
-        action="store_true",
-        help="fuzz the staging area (registry.staged_queries) instead "
-        "of the registered surface (empty since the r8 merge; kept for "
-        "future staging cycles)",
-    )
     args = ap.parse_args()
 
     if args.unicode:
@@ -206,11 +199,9 @@ def main() -> None:
             "--sf",
             work,
         ]
-        if args.staged:
-            cmd += ["--staged"]
         if args.only:
             cmd += ["--only", args.only]
-        elif args.unicode and not args.staged:
+        elif args.unicode:
             sys.path.insert(0, REPO)
             import __spark_entry__ as entry
 

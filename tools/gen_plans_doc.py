@@ -30,9 +30,7 @@ def main() -> None:
     from go_zoom_kinesis_spark.session import get_spark
 
     spark = get_spark(app_name="gen-plans")
-    # include the round-8 staging area: its plans are audited with the
-    # same table before the queries ever reach the registered surface
-    queries = {**registry.all_queries(), **registry.staged_queries()}
+    queries = registry.all_queries()
     rows = []
     # headline set first (bench order), then every other registered
     # query — the audit covers the full surface

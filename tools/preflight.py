@@ -100,13 +100,6 @@ def main():
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
     ap.add_argument("--only", default=None)
     ap.add_argument("--json-out", default=None)
-    ap.add_argument(
-        "--staged",
-        action="store_true",
-        help="check the staging area (registry.staged_queries) instead "
-        "of the registered surface (empty since the r8 merge; kept for "
-        "future staging cycles)",
-    )
     args = ap.parse_args()
 
     global SF_DIR
@@ -115,14 +108,8 @@ def main():
     import __spark_entry__ as entry
     from go_zoom_kinesis_spark.io import TABLES
 
-    if args.staged:
-        from go_zoom_kinesis_spark import registry
-
-        queries = registry.staged_queries()
-        oracles = registry.staged_oracle_sql()
-    else:
-        queries = entry.queries()
-        oracles = entry.oracle_sql()
+    queries = entry.queries()
+    oracles = entry.oracle_sql()
     names = sorted(queries)
     if args.only:
         wanted = args.only.split(",")

@@ -103,8 +103,7 @@ def main() -> None:
 
     spark = get_spark(app_name="gzk-scaling")
     spark.range(1).count()
-    # the round-8 staging area measures with the same protocol
-    queries = {**registry.all_queries(), **registry.staged_queries()}
+    queries = registry.all_queries()
     names = (
         args.only.split(",")
         if args.only
