@@ -1,28 +1,20 @@
-"""Benchmark harness (driver contract).
+"""Benchmark harness (driver contract): times every registered query.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+Usage: ``SPARK_GRAFT_SF_DIR=<dir of sf<N> parquet tables> python bench.py``
+(default: ``SF_DIR`` below, sf0.1) on ``local[$SPARK_GRAFT_CPUS]``.
 
-Output contract (r7 rework — the r5/r6 single line carried 119
-per-query timings, overflowed the driver's stdout-tail capture, and
-arrived truncated → BENCH "parsed": null): the LAST stdout line is now
-a SHORT summary JSON {"metric", "value", "unit", "sf",
-"value_baseline_set", "n_queries", "detail_file"}; the full per-query
-timing map goes to BENCH_DETAIL_r{N}.json next to this file (N = next
-round number inferred from existing BENCH_r*.json artifacts, override
-with $SPARK_GRAFT_BENCH_ROUND).
+Protocol, per query in registry order (``time_query``):
+``clearCache``, build the DataFrame (``build_s``), one warm-up noop
+write (``cold_s``), then three timed noop writes: ``steady_s`` is their
+min and ``spread_s`` their max - min. A noop-format write executes the
+full plan without a driver-side collect.
 
-Each query is forced end-to-end with a noop-format write (full plan
-execution, no driver-side collect).
-
-r12 additions (VERDICT r11 #1): the detail file also carries
-``registry_slice`` (this round's parity half of the ~93 non-headline
-registry queries, so every registered query has a timed row at most 2
-rounds old — subtotal kept OUT of ``value``), ``normalized_ratios``
-(each query vs its newest prior same-SF detail row, normalized by both
-runs' ``calibration_sec``), and ``regressions`` (ratio > 1.5 and
-either side ≥ 0.2 s); the stdout summary quotes the regression count
-+ first 8 names.
+Output contract: the LAST stdout line is a short summary JSON with
+exactly the keys ``metric``, ``value`` (Σ steady_s), ``value_end_to_end``
+(Σ build_s + cold_s + steady_s), ``unit``, ``sf``, ``value_baseline_set``
+(Σ steady_s over ``HEADLINE``), ``n_queries`` and ``detail_file``. The
+per-query rows go to ``BENCH_DETAIL_sf<sf>.json`` in ``ROOT`` (this
+file's directory), overwritten on each run.
 """
 
 from __future__ import annotations
@@ -32,12 +24,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Stable headline set — extend as operators land. Names must exist in
-# the registry; missing ones are reported with value -1.
+# The round-1 query set: ``value_baseline_set`` sums it, the figure
+# BASELINE.md compares against; tools/gen_plans_doc.py orders by it.
 HEADLINE = [
     "windowed_metrics",
     "metrics_aggregation",
@@ -91,305 +84,31 @@ HEADLINE = [
     "kmeans_update_step",
 ]
 
-# Added in round 4 — timed and reported, but ALSO rolled into a
-# separate subtotal so the headline total stays comparable with the
-# round-1 BASELINE set (the gate is vs that set's total).
-HEADLINE_R4 = [
-    "profile_columns",
-    "chunk_documents",
-    "bpe_pair_stats",
-    "reservoir_topk_per_lang",
-    "similarity_prefix_join",
-    "semantic_dedup_reps",
-    "bloom_prune_revenue",
-    "zorder_cluster_audit",
-    "quality_model_filter",
-    "window_median_orders",
-    "interval_concurrency_peak",
-    "latency_percentile_rollup",
-    "similarity_containment_join",
-    "skyline_parts_2d",
-    "compaction_plan",
-    "integrity_checksum_audit",
-    "minhash_user_overlap",
-    "dedup_canonical_chain",
-    "ts_profile_correlation",
-    "session_split_dual_cap",
-    "attribution_linear",
-    "ts_cusum_shift",
-    "nested_order_items_hof",
-    "bloom_novelty_filter",
-    "winsorize_values",
-]
 
-HEADLINE_R5 = [
-    "quantile_sketch_audit",
-    "snapshot_diff_cdc",
-    "triangle_count_nations",
-    "hard_negative_mining",
-    "minibatch_pack_plan",
-    "window_distribution_ranks",
-    "ts_autocorr_lag1",
-    "k_anonymity_audit",
-    "multimodal_arrow_hist",
-    "decontaminate_semantic",
-    "pit_join_user_status",
-    "pit_feature_matrix",
-    "filter_overlap_matrix",
-    "epoch_shuffle_plan",
-]
-
-HEADLINE_R6 = [
-    "lateral_topn_customers",
-    "recursive_supplier_chain",
-    "moments_mode_median",
-    "token_budget_plan",
-    "cross_lingual_contamination",
-    "groupby_all_revenue",
-    "try_functions_audit",
-    "arrow_scalar_udf_norm",
-    "matryoshka_truncation_audit",
-    "coreset_kcenter_step",
-    "collocation_pmi_top",
-    "duplicate_span_audit",
-    "vocab_growth_heaps",
-    "nullsafe_join_audit",
-    "transpose_priority_profile",
-    "param_sql_identifier_topn",
-    "export_shard_plan",
-    "pq_codebook_audit",
-    "assoc_rules_events",
-    "bootstrap_ci_chars",
-    "target_encoding_loo",
-    "gini_doclen_concentration",
-    "zipf_slope_fit",
-    "diversity_index_audit",
-    "filter_agreement_kappa",
-    "l_diversity_audit",
-    "stratified_split_exact",
-    "quantile_normalize_lengths",
-    "ivf_pq_adc_topk",
-    "group_kfold_assign",
-]
-
-
-HEADLINE_R7 = [
-    "embedding_pca_top",
-    "decontaminate_semantic_lsh",
-    "sample_neyman_allocation",
-]
-
-# the round-7 staging cohort, registered at round 8 — benched like any
-# other headline set since the merge
-HEADLINE_R8 = [
-    "simhash_hamming_join",
-    "duplicate_span_scrub",
-    "retrieval_mrr_eval",
-    "feature_hash_vectorize",
-    "negative_sampling_unigram",
-    "ts_linear_interpolate",
-    "bpe_train_merges",
-    "tokenizer_apply_bpe",
-    "winnow_fingerprint_overlap",
-    "dedup_incremental_lsh",
-    "domain_frequency_cap",
-    "lsh_recall_audit",
-    "filter_survival_sweep",
-    "purged_timefold_assign",
-    # built IN round 8: the composed two-tier near-dup architecture
-    # and the KMV mergeable distinct sketches
-    "dedup_two_tier_pipeline",
-    "kmv_distinct_sketch",
-    "kmv_sketch_overlap",
-    "coreset_kcenter_sample",
-    "kmv_merge_rollup",
-]
-
-# round 9: the new operator cohort
-HEADLINE_R9 = [
-    "dsir_importance_weights",
-    "ts_seasonal_decompose",
-    "contamination_longest_run",
-    "shard_rendezvous_assign",
-    "conformal_threshold_audit",
-    "ts_holt_linear",
-    "ivf_probe_sweep",
-    "watermark_lateness_sweep",
-    "entity_resolution_pipeline",
-]
-
-HEADLINE_R10 = [
-    "multimodal_decode_image",
-]
-
-HEADLINE_R11 = [
-    "dedup_components_star",
-]
-
-_ALL_HEADLINE = (
-    HEADLINE + HEADLINE_R4 + HEADLINE_R5 + HEADLINE_R6
-    + HEADLINE_R7 + HEADLINE_R8 + HEADLINE_R9 + HEADLINE_R10
-    + HEADLINE_R11
-)
-
-# r12 (VERDICT r11 #1b): registry queries OUTSIDE the headline sets —
-# ~93 names, mostly r1-r6 relational/behavior/quality families — were
-# oracle-timed in preflight logs but never entered BENCH_DETAIL, so a
-# perf regression there was invisible to the round-over-round diff.
-# Each round times HALF of them (deterministic round-parity slice of
-# the sorted names), so every registered query has a timed detail row
-# at most 2 rounds old. Slice timings are reported separately
-# (``registry_slice`` / ``value_registry_slice``) and NEVER roll into
-# ``value`` — the headline total must stay comparable across rounds.
-REGRESSION_RATIO_GATE = 1.5  # normalized; VERDICT r11 #1a
-
-
-def _registry_slice(all_names: list[str], rnd: int) -> list[str]:
-    # ADVICE r12: slice by a stable per-name hash parity, not sorted
-    # position — positional parity shifts every later name when one
-    # registry name is added/removed, which can land a name in the
-    # same half twice in a row and transiently break the "every query
-    # timed at most 2 rounds old" guarantee.
-    import zlib
-
-    extra = sorted(n for n in all_names if n not in set(_ALL_HEADLINE))
-    return [
-        n
-        for n in extra
-        if (zlib.crc32(n.encode()) ^ rnd) % 2 == 0
-    ]
-
-
-def _normalized_regressions(
-    repo: str,
-    rnd: int,
-    timings: dict[str, float],
-    calibration: float,
-    sf: float | None,
-    spreads: dict[str, float] | None = None,
-) -> tuple[dict, list[dict]]:
-    """Per-query ratio vs the newest prior BENCH_DETAIL, normalized by
-    each run's host-speed yardstick (VERDICT r11 #1a: the r10->r11
-    65.3-vs-58.3 forensics were manual; this makes them an artifact).
-
-    ratio = (cur_sec / cur_cal) / (prev_sec / prev_cal). Prior files
-    without ``calibration_sec`` (pre-r11) fall back to prev_cal =
-    cur_cal, i.e. an UNnormalized ratio, and say so via
-    ``normalized: false``. Sub-0.2 s pairs are exempt from the
-    regression list — at that scale a single GC pause exceeds the
-    gate, and min-of-3 only bounds, not eliminates, scheduler noise.
-    """
-    import glob
-    import re
-
-    # per-name newest prior timing: headline names match last round,
-    # registry-slice names two rounds back (slices alternate parity) —
-    # one backward merge covers both
-    prev_by_name: dict[str, tuple[float, float | None, int]] = {}
-    prev_spread: dict[str, float] = {}
-    found_any = False
-    for p in sorted(glob.glob(os.path.join(repo, "BENCH_DETAIL_r*.json"))):
-        m = re.search(r"BENCH_DETAIL_r(\d+)\.json$", p)
-        r = int(m.group(1)) if m else 0
-        if r >= rnd:
-            continue
-        try:
-            with open(p) as f:
-                prev = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if prev.get("sf") != sf:
-            # a smoke run at another scale factor is not a comparison
-            # baseline — cross-SF ratios would flag phantom regressions
-            continue
-        found_any = True
-        cal = prev.get("calibration_sec")
-        p_spread = prev.get("run_spread", {})
-        for name, sec in {
-            **prev.get("queries", {}),
-            **prev.get("registry_slice", {}),
-        }.items():
-            if sec and sec > 0:
-                prev_by_name[name] = (sec, cal, r)  # ascending → newest wins
-                if name in p_spread:
-                    prev_spread[name] = p_spread[name]
-                else:
-                    prev_spread.pop(name, None)
-    if not found_any:
-        return {"prev_rounds": [], "ratios": {}}, []
-    ratios: dict[str, float] = {}
-    regressions: list[dict] = []
-    rounds_used: set[int] = set()
-    for name, cur in timings.items():
-        hit = prev_by_name.get(name)
-        if hit is None or cur <= 0:
-            continue
-        p, prev_cal, r = hit
-        normalized = bool(prev_cal) and calibration > 0
-        ratio = cur / p
-        if normalized:
-            ratio *= prev_cal / calibration
-        ratios[name] = round(ratio, 3)
-        rounds_used.add(r)
-        if ratio > REGRESSION_RATIO_GATE and max(cur, p) >= 0.2:
-            row = {
-                "query": name,
-                "prev_round": r,
-                "prev_sec": p,
-                "cur_sec": cur,
-                "normalized": normalized,
-                "normalized_ratio": round(ratio, 3),
-            }
-            # r14 noise bars: the min-of-3 spreads on both sides. A
-            # flag whose cur_spread rivals (cur_sec - prev_sec) is
-            # contention, not a plan change — the r13 adjudication
-            # (10 flags, 8 pure noise), made an artifact.
-            if spreads and name in spreads:
-                row["cur_spread"] = spreads[name]
-            if name in prev_spread:
-                row["prev_spread"] = prev_spread[name]
-            regressions.append(row)
-    regressions.sort(key=lambda d: -d["normalized_ratio"])
-    return (
-        {"prev_rounds": sorted(rounds_used), "ratios": ratios},
-        regressions,
-    )
-
-
-def _calibration_sec() -> float:
-    """Fixed pure-python CPU loop, min-of-3 (VERDICT r10 #5): a
-    host-speed yardstick recorded alongside the suite so
-    round-over-round bench diffs can be normalized for ambient host
-    drift without manual forensics (r10 burned real effort proving a
-    1.08x "regression" was ambient — four identical-code runs spanned
-    54-72 s). Pure python + fixed work = independent of Spark, data,
-    and this repo's code; only the host moves it."""
-    best = float("inf")
+def time_query(spark, fn, sf_dir: str) -> dict[str, float]:
+    """One query's build, cold and steady seconds (see the module
+    docstring). Clearing the cache first makes each timing a property
+    of this query alone: cached intermediates left by earlier queries
+    would otherwise evict each other under storage-memory pressure, and
+    a timed run would pay a recompute another query caused. Min-of-3 is
+    the steady-state estimator under contention from other tenants."""
+    spark.catalog.clearCache()
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    t2 = time.perf_counter()
+    runs = []
     for _ in range(3):
-        t0 = time.perf_counter()
-        acc = 0
-        for i in range(2_000_000):
-            acc += i * i ^ (i >> 3)
-        best = min(best, time.perf_counter() - t0)
-    assert acc >= 0  # keep the loop un-eliminable
-    return round(best, 4)
-
-
-def _round_no(repo: str) -> int:
-    """Next round number: driver artifacts BENCH_r{N}.json exist for
-    completed rounds, so the in-flight round is max+1."""
-    env = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
-    if env:
-        return int(env)
-    import glob
-    import re
-
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(repo, "BENCH_r*.json"))
-        if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-    ]
-    return (max(rounds) + 1) if rounds else 1
+        t = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        runs.append(time.perf_counter() - t)
+    return {
+        "build_s": round(t1 - t0, 3),
+        "cold_s": round(t2 - t1, 3),
+        "steady_s": round(min(runs), 3),
+        "spread_s": round(max(runs) - min(runs), 3),
+    }
 
 
 def main() -> None:
@@ -397,167 +116,48 @@ def main() -> None:
     from go_zoom_kinesis_spark.session import get_spark
 
     spark = get_spark(app_name="gzk-bench")
-    # bench-only log hygiene (VERDICT r7 task 7): every unpartitioned
-    # window in the registry runs on an audited-bounded relation
-    # (histograms, threshold sweeps, K-row tails — see PLANS.md), so
-    # the per-query "WindowExec: No Partition Defined" WARN repeats
-    # hundreds of times and buries real warnings in the bench tail.
-    # Silence exactly that category, bench process only.
+    # every unpartitioned window in the registry runs on a bounded
+    # relation (histograms, threshold sweeps, K-row tails; see
+    # PLANS.md), so the per-query "WindowExec: No Partition Defined"
+    # WARN would bury real warnings in the bench tail
     jvm = spark._jvm
     jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
         "org.apache.spark.sql.execution.window.WindowExec",
         jvm.org.apache.logging.log4j.Level.ERROR,
     )
-    queries = registry.all_queries()
-
-    # warm the JVM + parquet footers with a trivial action
+    # warm the JVM with a trivial action
     spark.range(1).count()
 
-    # host-speed yardstick, sampled before AND after the suite (the
-    # suite runs ~1 min at sf0.1 — ambient load can change mid-run);
-    # the min of the two is the normalization divisor
-    cal_pre = _calibration_sec()
+    rows = {
+        name: time_query(spark, fn, SF_DIR)
+        for name, fn in registry.all_queries().items()
+    }
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    repo = os.path.dirname(os.path.abspath(__file__))
-    rnd = _round_no(repo)
-    slice_names = _registry_slice(list(queries), rnd)
-
-    def time_query(name: str) -> tuple[float, list[float]]:
-        fn = queries.get(name)
-        if fn is None:
-            return -1.0, []
-        # Hermetic per-query measurement: several operators .cache()
-        # intermediates (shingle arrays, candidate pairs, parent maps).
-        # Left to accumulate across the ~65-query session, those blocks
-        # evict each other under storage-memory pressure and a timed
-        # run silently pays a recompute another query caused (r4:
-        # dedup_ngram_jaccard 0.20→1.17 s with an unchanged plan —
-        # isolated it still ran 0.30 s). Clearing before each query
-        # makes every timing a property of that query alone; its own
-        # warm-up below repopulates its own caches.
-        spark.catalog.clearCache()
-        df = fn(spark, SF_DIR)
-        # warm-up run amortizes codegen/JIT + file-footer reads; the
-        # measurement is the best of three timed runs — this host runs
-        # other tenants, and min-of-N is the standard estimator for
-        # steady-state latency under external contention (a GC pause
-        # can span two consecutive runs; three keeps sub-second
-        # queries from reporting a transient as a regression)
-        df.write.format("noop").mode("overwrite").save()
-        runs: list[float] = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-        return min(runs), runs
-
-    # r14 (VERDICT r13 #2): per-query NOISE BAR — the spread of the
-    # three timed runs relative to their min. On a 32-thread host with
-    # other tenants, back-to-back identical-code suite runs differ by
-    # ~20%, so a 1.5x min-vs-min ratio alone cannot distinguish a plan
-    # regression from scheduler contention; the spread is measured
-    # evidence of ambient jitter for exactly the runs that produced the
-    # min. Recorded per query in the detail file and quoted on each
-    # regression row (both sides when the prior file carries one).
-    timings: dict[str, float] = {}
-    run_spread: dict[str, float] = {}
-    total = 0.0
-    total_baseline_set = 0.0
-    for name in _ALL_HEADLINE:
-        dt, runs = time_query(name)
-        timings[name] = dt
-        if dt < 0:
-            continue
-        run_spread[name] = round(max(runs) - dt, 3)
-        total += dt
-        if name in HEADLINE:
-            total_baseline_set += dt
-
-    # registry-slice pass (r12): the non-headline half for this round's
-    # parity — separate map + subtotal, never added to `total`
-    slice_timings: dict[str, float] = {}
-    slice_total = 0.0
-    for name in slice_names:
-        dt, runs = time_query(name)
-        slice_timings[name] = dt
-        if dt > 0:
-            run_spread[name] = round(max(runs) - dt, 3)
-            slice_total += dt
-
-    cal_post = _calibration_sec()
-    calibration = min(cal_pre, cal_post)
-
-    ratio_info, regressions = _normalized_regressions(
-        repo,
-        rnd,
-        {**timings, **slice_timings},
-        calibration,
-        float(sf) if sf else None,
-        spreads=run_spread,
-    )
-
-    detail_file = f"BENCH_DETAIL_r{rnd:02d}.json"
-    with open(os.path.join(repo, detail_file), "w") as f:
-        json.dump(
-            {
-                "metric": "headline_queries_total",
-                "value": round(total, 3),
-                "value_baseline_set": round(total_baseline_set, 3),
-                "unit": "sec",
-                "queries": timings,
-                # non-headline registry queries, this round's parity
-                # half (VERDICT r11 #1b) — timed identically but kept
-                # out of `value` so the headline total stays
-                # round-comparable
-                "registry_slice": slice_timings,
-                "value_registry_slice": round(slice_total, 3),
-                "registry_slice_parity": rnd % 2,
-                # r14 (VERDICT r13 #2): per-query noise bar — spread
-                # (max - min) of the 3 timed runs behind each min
-                "run_spread": run_spread,
-                # per-query ratio vs each name's newest prior detail
-                # row, normalized by both runs' calibration_sec
-                # (VERDICT r11 #1a)
-                "normalized_ratios": ratio_info,
-                "regressions": regressions,
-                "regression_ratio_gate": REGRESSION_RATIO_GATE,
-                "sf": float(sf) if sf else None,
-                "cpus": os.environ.get("SPARK_GRAFT_CPUS"),
-                "calibration_sec": calibration,
-                "calibration_pre_sec": cal_pre,
-                "calibration_post_sec": cal_post,
-            },
-            f,
-            indent=1,
-        )
+    detail_file = f"BENCH_DETAIL_sf{sf}.json"
+    with open(os.path.join(ROOT, detail_file), "w") as f:
+        json.dump(rows, f, indent=1)
     # LAST stdout line = the short driver-parsable summary; the
-    # per-query map lives only in the detail file (a 119-entry inline
-    # map exceeded the driver's stdout-tail capture in r5/r6).
+    # per-query rows live only in the detail file, because the driver
+    # captures only the tail of stdout
     print(
         json.dumps(
             {
                 "metric": "headline_queries_total",
-                "value": round(total, 3),
+                "value": round(sum(r["steady_s"] for r in rows.values()), 3),
+                "value_end_to_end": round(
+                    sum(
+                        r["build_s"] + r["cold_s"] + r["steady_s"]
+                        for r in rows.values()
+                    ),
+                    3,
+                ),
                 "unit": "sec",
-                # subtotal over exactly the round-1 BASELINE query set —
-                # the apples-to-apples number vs BASELINE.md (the full
-                # `value` above also counts queries added in later
-                # rounds)
-                "value_baseline_set": round(total_baseline_set, 3),
-                "n_queries": len(timings),
+                "value_baseline_set": round(
+                    sum(rows[n]["steady_s"] for n in HEADLINE if n in rows), 3
+                ),
+                "n_queries": len(rows),
                 "sf": float(sf) if sf else None,
-                # fixed pure-python CPU loop (min of a pre- and
-                # post-suite sample): divide totals by this to
-                # normalize round-over-round comparisons for ambient
-                # host drift (VERDICT r10 #5)
-                "calibration_sec": calibration,
-                # calibration-normalized per-query regressions vs each
-                # name's newest prior detail row (gate 1.5x) — names
-                # only here (stdout-tail budget); prev/cur secs and
-                # ratios are in the detail file's `regressions`
-                "n_regressions": len(regressions),
-                "regressions": [d["query"] for d in regressions[:8]],
                 "detail_file": detail_file,
             }
         ),

@@ -684,7 +684,8 @@ def embedding_pca_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so an unpartitioned window is bounded by construction), followed
     # by ONE aggregate: den/trace fold over the diagonal rows, num/frob
     # over all rows. Plan: 3 tiny exchanges + 1 aggregate, zero
-    # broadcast builds (plan diff in plans/r13/). Every arithmetic
+    # broadcast builds (plan diff in
+    # plans/r13/embedding_pca_top_{before,after}.txt). Every arithmetic
     # expression is unchanged token-for-token, so the integer/decimal
     # semantics — and the oracle hash — are identical.
     from pyspark.sql import Window

@@ -13,6 +13,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> int:
+    """Cores for ``local[N]`` and the shuffle width: ``$SPARK_GRAFT_CPUS``
+    when set, otherwise the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "go-zoom-kinesis-spark",
     shuffle_partitions: int | None = None,
@@ -23,9 +30,9 @@ def get_spark(
     AQE is enabled so skewed joins/aggregations re-plan at runtime —
     essential at 100 TB, harmless at sf0.001.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     if shuffle_partitions is None:
-        shuffle_partitions = max(int(cpus), 8)
+        shuffle_partitions = max(cpus, 8)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -68,7 +75,7 @@ def configure_session(spark: SparkSession) -> SparkSession:
         "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
         # right-size shuffles for the local test scale (runtime-settable;
         # a cluster deployment would size this to cores × 2-3)
-        "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "spark.sql.shuffle.partitions": str(local_cpus()),
         # restore runtime-bloom-filter injection gates to their cluster
         # defaults — operators/layout.py forces them per-query at local
         # test scale and this reset stops the override leaking into

@@ -60,6 +60,8 @@ class CheckpointStore(Protocol):
 
     def save_checkpoint(self, shard_id: str, sequence_number: str) -> None: ...
 
+    def all_checkpoints(self) -> dict[str, str]: ...
+
 
 class InMemoryCheckpointStore:
     """Dict behind a lock (reference: HashMap behind RwLock)."""
@@ -83,8 +85,9 @@ class InMemoryCheckpointStore:
 
 class JsonFileCheckpointStore:
     """Durable KV store: one JSON file per shard under a prefix dir,
-    written atomically (tmp + rename). The ``key_prefix`` mirrors the
-    DynamoDB store's prefixed keys (src/store/dynamodb.rs:74-77)."""
+    written atomically (tmp + fsync + rename). The ``key_prefix``
+    mirrors the DynamoDB store's prefixed keys
+    (src/store/dynamodb.rs:74-77)."""
 
     def __init__(self, root: str, key_prefix: str = "") -> None:
         self.root = root
@@ -113,6 +116,10 @@ class JsonFileCheckpointStore:
                 json.dump(
                     {"shard_id": shard_id, "sequence_number": str(sequence_number)}, f
                 )
+                # durable before visible: a crash after the rename must
+                # not leave an empty or torn checkpoint file
+                f.flush()
+                os.fsync(f.fileno())
             os.replace(tmp, path)
         except BaseException:
             if os.path.exists(tmp):

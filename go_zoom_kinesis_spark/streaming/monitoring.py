@@ -114,8 +114,9 @@ class MetricsAggregator:
         """``rate_limit`` caps accepted events per wall-clock second
         (the reference's ``rate_limit: Some(1000)``,
         src/monitoring/types.rs:34); excess events are counted in
-        ``dropped_events`` and discarded. ``clock`` is injectable for
-        deterministic tests."""
+        ``dropped_events`` and kept out of the ``events`` ring, but
+        still fold into the per-shard metrics. ``clock`` is injectable
+        for deterministic tests."""
         self.window_seconds = window_seconds
         self.rate_limit = rate_limit
         self.dropped_events = 0
@@ -130,17 +131,8 @@ class MetricsAggregator:
         now = self._clock()
         ev = MonitoringEvent(now, shard_id, event_type, detail)
         with self._lock:
-            if self.rate_limit is not None:
-                if now - self._rate_window_start >= 1.0:
-                    self._rate_window_start = now
-                    self._rate_window_count = 0
-                if self._rate_window_count >= self.rate_limit:
-                    # over budget: the reference's bounded channel drops
-                    # the send; the event never reaches the aggregator
-                    self.dropped_events += 1
-                    return
-                self._rate_window_count += 1
-            self.events.append(ev)
+            # fold first: per-shard counts are never lossy, only the
+            # event ring is rate-limited
             m = self._metrics.setdefault(shard_id, ShardMetrics(shard_id))
             m.last_event_at = ev.timestamp
             if event_type == RECORD_SUCCESS:
@@ -163,6 +155,17 @@ class MetricsAggregator:
                 m.iterator_history.append(
                     (detail.get("resumed_from"), ev.timestamp)
                 )
+            if self.rate_limit is not None:
+                if now - self._rate_window_start >= 1.0:
+                    self._rate_window_start = now
+                    self._rate_window_count = 0
+                if self._rate_window_count >= self.rate_limit:
+                    # over budget: the reference's bounded channel drops
+                    # the send, so the event never reaches the ring
+                    self.dropped_events += 1
+                    return
+                self._rate_window_count += 1
+            self.events.append(ev)
 
     def event_types(self) -> list[str]:
         with self._lock:

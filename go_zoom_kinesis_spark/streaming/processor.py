@@ -250,7 +250,7 @@ class StreamProcessor:
         cfg = self.config
         pad = seq_order_key(cfg.seq_col)
 
-        if cfg.prefer_stored_checkpoint and hasattr(self.store, "all_checkpoints"):
+        if cfg.prefer_stored_checkpoint:
             ckpts = self.store.all_checkpoints()
             if ckpts:
                 # AfterSequenceNumber per shard: seq > checkpoint

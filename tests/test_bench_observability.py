@@ -1,14 +1,12 @@
-"""bench.py's round-over-round observability (r12, VERDICT r11 #1).
+"""bench.py's output contract.
 
-Pure-function tests — no Spark session. Pins:
+Pins:
 
-- the registry slice rotation: parity halves are disjoint, cover every
-  non-headline registry name, and never touch headline names (their
-  timings must stay in `queries` where the round diff expects them);
-- normalized ratio math: ratio = (cur/cur_cal)/(prev/prev_cal), newest
-  prior round wins per-name, cross-SF files are ignored, the 1.5x gate
-  and the 0.2 s noise floor decide the regressions list;
-- headline names stay unique (a duplicate would double-count `value`).
+- headline names stay unique (a duplicate would double-count
+  ``value_baseline_set``);
+- the last stdout line carries exactly the documented summary keys, and
+  the detail file holds a build/cold/steady/spread row for every
+  registered query.
 """
 
 from __future__ import annotations
@@ -17,90 +15,40 @@ import json
 
 import bench
 
+SUMMARY_KEYS = {
+    "metric",
+    "value",
+    "value_end_to_end",
+    "unit",
+    "sf",
+    "value_baseline_set",
+    "n_queries",
+    "detail_file",
+}
+
 
 def test_headline_names_unique():
-    assert len(bench._ALL_HEADLINE) == len(set(bench._ALL_HEADLINE))
+    assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
 
 
-def test_slice_rotation_partitions_non_headline():
-    names = bench._ALL_HEADLINE[:5] + ["zz_extra", "aa_extra", "mm_extra"]
-    even = bench._registry_slice(names, 12)
-    odd = bench._registry_slice(names, 13)
-    assert not set(even) & set(odd)
-    assert set(even) | set(odd) == {"zz_extra", "aa_extra", "mm_extra"}
-    assert not set(even) & set(bench._ALL_HEADLINE)
-    # same parity → same slice (deterministic round-over-round)
-    assert bench._registry_slice(names, 14) == even
+def test_summary_line_contract(spark, tmp_path, monkeypatch, capsys):
+    from go_zoom_kinesis_spark import registry
 
+    def trivial(s, sf_dir):
+        return s.range(10)
 
-def _detail(tmp_path, rnd, queries, cal, sf=0.1, registry_slice=None):
-    p = tmp_path / f"BENCH_DETAIL_r{rnd:02d}.json"
-    p.write_text(
-        json.dumps(
-            {
-                "queries": queries,
-                "registry_slice": registry_slice or {},
-                "calibration_sec": cal,
-                "sf": sf,
-            }
-        )
+    monkeypatch.setattr(
+        registry, "all_queries", lambda: {"q_a": trivial, "q_b": trivial}
     )
-    return p
+    monkeypatch.setattr(bench, "ROOT", str(tmp_path))
+    bench.main()
 
-
-def test_normalized_ratio_and_gate(tmp_path):
-    _detail(tmp_path, 11, {"q_fast": 1.0, "q_reg": 1.0}, cal=0.2)
-    # current host is 2x slower (cal 0.4): a raw 2x on q_fast is
-    # exactly flat normalized; q_reg at raw 4x is 2x normalized → flagged
-    info, regs = bench._normalized_regressions(
-        str(tmp_path), 12, {"q_fast": 2.0, "q_reg": 4.0}, 0.4, 0.1
-    )
-    assert info["ratios"]["q_fast"] == 1.0
-    assert info["ratios"]["q_reg"] == 2.0
-    assert [r["query"] for r in regs] == ["q_reg"]
-    assert regs[0]["prev_round"] == 11
-    assert regs[0]["normalized"] is True
-
-
-def test_newest_prior_round_wins_and_slices_count(tmp_path):
-    _detail(tmp_path, 10, {"q": 4.0}, cal=0.2, registry_slice={"s": 1.0})
-    _detail(tmp_path, 11, {"q": 1.0}, cal=0.2)
-    info, regs = bench._normalized_regressions(
-        str(tmp_path), 12, {"q": 1.0, "s": 1.0}, 0.2, 0.1
-    )
-    # q compares to r11 (flat), NOT r10 (which would read as 0.25x);
-    # s was only ever timed in r10's slice → compared there
-    assert info["ratios"] == {"q": 1.0, "s": 1.0}
-    assert info["prev_rounds"] == [10, 11]
-    assert regs == []
-
-
-def test_cross_sf_and_future_files_ignored(tmp_path):
-    _detail(tmp_path, 11, {"q": 0.1}, cal=0.2, sf=0.001)
-    _detail(tmp_path, 13, {"q": 0.1}, cal=0.2, sf=0.1)  # future round
-    info, regs = bench._normalized_regressions(
-        str(tmp_path), 12, {"q": 3.0}, 0.2, 0.1
-    )
-    assert info["ratios"] == {}
-    assert regs == []
-
-
-def test_noise_floor_exempts_tiny_pairs(tmp_path):
-    _detail(tmp_path, 11, {"tiny": 0.05, "big": 1.0}, cal=0.2)
-    info, regs = bench._normalized_regressions(
-        str(tmp_path), 12, {"tiny": 0.15, "big": 3.0}, 0.2, 0.1
-    )
-    # tiny tripled but both sides < 0.2 s → not a regression row
-    assert [r["query"] for r in regs] == ["big"]
-    # ...but its ratio is still visible for anyone who looks
-    assert info["ratios"]["tiny"] == 3.0
-
-
-def test_unnormalized_fallback_without_prev_calibration(tmp_path):
-    _detail(tmp_path, 11, {"q": 1.0}, cal=None)
-    info, regs = bench._normalized_regressions(
-        str(tmp_path), 12, {"q": 2.0}, 0.4, 0.1
-    )
-    # no prev calibration → raw ratio, flagged normalized: false
-    assert info["ratios"]["q"] == 2.0
-    assert regs[0]["normalized"] is False
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert set(summary) == SUMMARY_KEYS
+    assert summary["n_queries"] == 2
+    assert summary["value_end_to_end"] >= summary["value"] >= 0
+    rows = json.loads((tmp_path / summary["detail_file"]).read_text())
+    assert set(rows) == {"q_a", "q_b"}
+    for row in rows.values():
+        assert set(row) == {"build_s", "cold_s", "steady_s", "spread_s"}
+        assert all(v >= 0 for v in row.values())

@@ -124,6 +124,28 @@ def test_json_store_roundtrip_and_prefix(tmp_path):
     assert s2.all_checkpoints() == {"x/y": "1", "x_y": "2"}
 
 
+def test_json_store_fsyncs_before_replace(tmp_path, monkeypatch):
+    import os
+
+    calls = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        calls.append("fsync")
+        real_fsync(fd)
+
+    def replace(src, dst):
+        calls.append("replace")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    s = JsonFileCheckpointStore(str(tmp_path))
+    s.save_checkpoint("shard-1", "42")
+    assert calls == ["fsync", "replace"]
+    assert s.get_checkpoint("shard-1") == "42"
+
+
 # --- processor fixtures -------------------------------------------------
 
 N_SHARDS = 4
@@ -862,13 +884,13 @@ def test_monitoring_rate_limit_drops_and_recovers():
         agg.emit("s", M.RECORD_SUCCESS, count=1)
     assert len(agg.events) == 5
     assert agg.dropped_events == 3
-    # dropped events never reach the metrics fold
-    assert agg.metrics("s").records_processed == 5
+    # dropped events still reach the metrics fold
+    assert agg.metrics("s").records_processed == 8
     # next second: budget refreshes
     now[0] += 1.0
     agg.emit("s", M.RECORD_SUCCESS, count=1)
     assert len(agg.events) == 6
-    assert agg.metrics("s").records_processed == 6
+    assert agg.metrics("s").records_processed == 9
 
 
 def test_idempotent_sink_exactly_once_under_replay(spark, tmp_path, sf_dir):

@@ -107,6 +107,7 @@ def main():
 
     import __spark_entry__ as entry
     from go_zoom_kinesis_spark.io import TABLES
+    from go_zoom_kinesis_spark.session import local_cpus
 
     queries = entry.queries()
     oracles = entry.oracle_sql()
@@ -118,7 +119,7 @@ def main():
     from pyspark.sql import SparkSession
 
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+        SparkSession.builder.master(f"local[{local_cpus()}]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.driver.memory", "8g")
         .appName("preflight")

@@ -2,8 +2,9 @@
 
 Each scale step is 10× the data; a query whose wall time grows ≈
 linearly (or stays overhead-bound) scales; super-linear growth flags a
-plan that will not survive the next 100×. Times are min-of-three after
-a warm-up (same estimator as bench.py).
+plan that will not survive the next 100×. Each time is bench.py's
+``time_query`` steady_s: min-of-three after a warm-up, with the cache
+cleared per (query, sf).
 
 Prints one JSON line per query:
     {"query": name, "t_sf0001": s, "t_sf001": s, "t_sf01": s,
@@ -20,7 +21,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -56,24 +56,6 @@ SF100_DIR = os.path.join(
 )
 
 
-def _time_query(fn, spark, sf_dir: str) -> float:
-    # hermetic per-(query, sf) measurement — same rule as bench.py:
-    # cached intermediates from a previous sf dir (or query) otherwise
-    # evict this run's under storage pressure and the timing silently
-    # pays a recompute another measurement caused (seen at sf10:
-    # dedup_ngram_jaccard 15.5 s vs 23.5 s across runs purely from
-    # cache residue of its own sf1 pass)
-    spark.catalog.clearCache()
-    df = fn(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()  # warm-up
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--only", default=None)
@@ -88,30 +70,14 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from bench import (
-        HEADLINE,
-        HEADLINE_R4,
-        HEADLINE_R5,
-        HEADLINE_R6,
-        HEADLINE_R7,
-        HEADLINE_R8,
-        HEADLINE_R9,
-        HEADLINE_R10,
-    )
+    from bench import time_query
     from go_zoom_kinesis_spark import registry
     from go_zoom_kinesis_spark.session import get_spark
 
     spark = get_spark(app_name="gzk-scaling")
     spark.range(1).count()
     queries = registry.all_queries()
-    names = (
-        args.only.split(",")
-        if args.only
-        else list(
-            HEADLINE + HEADLINE_R4 + HEADLINE_R5 + HEADLINE_R6
-            + HEADLINE_R7 + HEADLINE_R8 + HEADLINE_R9 + HEADLINE_R10
-        )
-    )
+    names = args.only.split(",") if args.only else list(queries)
 
     sf_dirs = dict(SF_DIRS)
     if args.dirs:
@@ -134,10 +100,11 @@ def main() -> None:
         row = {"query": name}
         for label, d in sf_dirs.items():
             try:
-                row[f"t_{label.replace('.', '')}"] = _time_query(fn, spark, d)
+                t = time_query(spark, fn, d)["steady_s"]
             except Exception:
                 # partial decade dirs (sf10) only carry some tables
-                row[f"t_{label.replace('.', '')}"] = None
+                t = None
+            row[f"t_{label.replace('.', '')}"] = t
         t_small, t_big = row["t_sf001"], row["t_sf01"]
         row["growth_10x"] = round(t_big / t_small, 2) if t_small > 0 else None
         if row.get("t_sf1") and t_big > 0:
