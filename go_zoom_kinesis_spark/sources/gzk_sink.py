@@ -1,42 +1,43 @@
-"""Checkpoint-style SINK via the Spark 4 Python DataSource writer API —
-the write-side twin of ``gzk_datasource.py``'s reader: the reference's
-at-least-once checkpoint commit (src/store/mod.rs trait +
-src/processor.rs:1542-1560 batch fold → save) re-expressed as a
-two-phase Spark writer.
+"""Exactly-once manifest SINK: the reference's at-least-once checkpoint
+commit (src/store/mod.rs trait + src/processor.rs:1542-1560 batch fold
+→ save) plus a batch-id-keyed manifest, the shape of Structured
+Streaming's file sink log. No sink path runs per-row Python code.
 
-Protocol (the shape every transactional Spark sink uses):
+Protocol:
 
-1. ``write(iterator)`` runs ON EXECUTORS: each task serializes its
-   partition to a uniquely-named ``*.part.jsonl`` under ``<path>/tmp/``
-   and returns a commit message (file, row count, max sequence seen).
-   A failed/retried task leaves only an orphaned temp file — never
-   visible data.
-2. ``commit(messages)`` runs ON THE DRIVER exactly once per successful
-   job: temp files move into ``<path>/`` atomically (same-filesystem
-   rename) and a manifest line records the batch — files not in the
-   manifest are not data. ``abort()`` deletes the temps.
-3. The STREAMING variant keys the manifest by ``batchId`` —
-   re-committing an already-manifested batch is a NO-OP, which is what
-   makes micro-batch replay after a checkpoint rollback idempotent
-   (same guarantee as ``streaming/sinks.py``'s foreachBatch overwrite,
-   now at the DataSource layer).
+1. STAGE, on executors: parquet parts under ``<path>/tmp/``.
+   ``commit_batch`` stages with Spark's own parquet writer; the
+   ``gzk_checkpoint_sink`` DataSource (batch and streaming) gets Arrow
+   batches and writes one parquet file per task. A failed or retried
+   task leaves only an orphaned temp file — never visible data.
+2. PUBLISH, on the driver, once per successful job: the parts move
+   into ``<path>/`` (same-filesystem rename) and ONE manifest line
+   ``{batch_id, files, n_rows}`` records the batch, ``n_rows`` read
+   from the parts' parquet footers. Files not in the manifest are not
+   data. ``abort()`` deletes the temps.
+3. A ``batch_id`` already in the manifest is a NO-OP: ``commit_batch``
+   returns before any write, and the streaming writer drops its
+   replayed temps. That makes micro-batch replay after a checkpoint
+   rollback idempotent (same guarantee as ``streaming/sinks.py``'s
+   foreachBatch overwrite).
 
-Scale: executors never coordinate (one temp file per task, no
-renames until the driver commit); the manifest is O(batches), not
-O(rows); max-sequence per shard aggregates from commit messages
-driver-side exactly like the reference's per-shard checkpoint fold.
+Scale: executors never coordinate (no renames until the driver
+commit); the manifest is O(batches), not O(rows).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceStreamWriter,
-    DataSourceWriter,
+    DataSourceArrowWriter,
+    DataSourceStreamArrowWriter,
     WriterCommitMessage,
 )
 
@@ -44,29 +45,24 @@ MANIFEST = "_manifest.jsonl"
 
 
 class GzkCommitMessage(WriterCommitMessage):
-    def __init__(self, fname: str, n_rows: int, max_seq: int | None):
+    def __init__(self, fname: str | None):
+        # the staged part, relative to ``<path>/tmp/``; None when the
+        # task had no rows and wrote nothing
         self.fname = fname
-        self.n_rows = n_rows
-        self.max_seq = max_seq
 
 
-def _write_partition(path: str, iterator) -> GzkCommitMessage:
-    tmp_dir = os.path.join(path, "tmp")
-    os.makedirs(tmp_dir, exist_ok=True)
-    fname = f"{uuid.uuid4().hex}.part.jsonl"
-    n, max_seq = 0, None
-    with open(os.path.join(tmp_dir, fname), "w") as f:
-        for row in iterator:
-            d = row.asDict(recursive=True)
-            for k, v in list(d.items()):
-                if hasattr(v, "isoformat"):
-                    d[k] = v.isoformat()
-            if "sequence_number" in d and d["sequence_number"] is not None:
-                s = int(d["sequence_number"])
-                max_seq = s if max_seq is None else max(max_seq, s)
-            f.write(json.dumps(d, sort_keys=True) + "\n")
-            n += 1
-    return GzkCommitMessage(fname, n, max_seq)
+def _write_batches(path: str, iterator) -> GzkCommitMessage:
+    """One task's Arrow batches → one parquet file under ``tmp/``."""
+    fname, writer = f"{uuid.uuid4().hex}.parquet", None
+    for batch in iterator:
+        if writer is None:
+            os.makedirs(os.path.join(path, "tmp"), exist_ok=True)
+            writer = pq.ParquetWriter(os.path.join(path, "tmp", fname), batch.schema)
+        writer.write_batch(batch)
+    if writer is None:
+        return GzkCommitMessage(None)
+    writer.close()
+    return GzkCommitMessage(fname)
 
 
 def _manifest_entries(path: str) -> list[dict]:
@@ -112,17 +108,13 @@ def _append_manifest(path: str, entry: dict) -> None:
 
 
 def _commit_files(path: str, messages, batch_id, overwrite: bool = False) -> None:
-    """Driver-side: publish temp files + append ONE manifest line.
+    """Driver-side: publish the staged parts + append ONE manifest line.
     Idempotent per batch_id — a replayed commit is a no-op. With
     ``overwrite`` (batch writer ``mode('overwrite')``) the existing
     manifest and data files are cleared first, so the committed state
     is exactly this job's output."""
     if batch_id is not None and batch_id in _manifest_batches(path):
-        for m in messages:  # replay: drop the re-written temps
-            if m is not None:
-                tmp = os.path.join(path, "tmp", m.fname)
-                if os.path.exists(tmp):
-                    os.remove(tmp)
+        _abort_files(path, messages)  # replay: drop the re-written temps
         return
     if overwrite:
         # truncate-then-publish: drop the manifest first (readers see
@@ -132,66 +124,43 @@ def _commit_files(path: str, messages, batch_id, overwrite: bool = False) -> Non
         if os.path.exists(mf):
             os.remove(mf)
         for fname in os.listdir(path):
-            if fname.endswith(".part.jsonl"):
+            if fname.endswith(".parquet"):
                 os.remove(os.path.join(path, fname))
-    files, total, max_seq = [], 0, None
-    for m in messages:
-        if m is None:
-            continue
-        os.replace(
-            os.path.join(path, "tmp", m.fname), os.path.join(path, m.fname)
-        )
-        files.append(m.fname)
-        total += m.n_rows
-        if m.max_seq is not None:
-            max_seq = m.max_seq if max_seq is None else max(max_seq, m.max_seq)
-    _append_manifest(
-        path,
-        {
-            "batch_id": batch_id,
-            "files": sorted(files),
-            "n_rows": total,
-            "checkpoint_seq": max_seq,
-        },
-    )
+    # part names are unique: uuid-named task files, or Spark parts that
+    # embed their job's uuid
+    staged = sorted(m.fname for m in messages if m is not None and m.fname)
+    files = [os.path.basename(f) for f in staged]
+    for src, dst in zip(staged, files):
+        os.replace(os.path.join(path, "tmp", src), os.path.join(path, dst))
+    n_rows = sum(pq.read_metadata(os.path.join(path, f)).num_rows for f in files)
+    _append_manifest(path, {"batch_id": batch_id, "files": files, "n_rows": n_rows})
 
 
 def _abort_files(path: str, messages) -> None:
     for m in messages:
-        if m is None:
-            continue
-        tmp = os.path.join(path, "tmp", m.fname)
-        if os.path.exists(tmp):
-            os.remove(tmp)
+        if m is not None and m.fname:
+            tmp = os.path.join(path, "tmp", m.fname)
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
 
-class GzkBatchWriter(DataSourceWriter):
+class GzkBatchWriter(DataSourceArrowWriter):
     def __init__(self, options, overwrite: bool = False):
         self._path = options["path"]
         self._overwrite = overwrite
 
     def write(self, iterator) -> GzkCommitMessage:
-        return _write_partition(self._path, iterator)
+        return _write_batches(self._path, iterator)
 
-    def commit(self, messages) -> None:
-        _commit_files(self._path, messages, None, overwrite=self._overwrite)
+    def commit(self, messages, batchId: int | None = None) -> None:
+        _commit_files(self._path, messages, batchId, overwrite=self._overwrite)
 
-    def abort(self, messages) -> None:
+    def abort(self, messages, batchId: int | None = None) -> None:
         _abort_files(self._path, messages)
 
 
-class GzkStreamWriter(DataSourceStreamWriter):
-    def __init__(self, options):
-        self._path = options["path"]
-
-    def write(self, iterator) -> GzkCommitMessage:
-        return _write_partition(self._path, iterator)
-
-    def commit(self, messages, batchId: int) -> None:
-        _commit_files(self._path, messages, batchId)
-
-    def abort(self, messages, batchId: int) -> None:
-        _abort_files(self._path, messages)
+class GzkStreamWriter(GzkBatchWriter, DataSourceStreamArrowWriter):
+    """The batch writer, with the manifest keyed by ``batchId``."""
 
 
 class GzkSinkDataSource(DataSource):
@@ -211,32 +180,36 @@ def register(spark) -> None:
 
 
 def commit_batch(df, path: str, batch_id: int) -> None:
-    """``foreachBatch`` adapter for the two-phase sink — the
-    composition point between ``StreamProcessor`` (which owns the
-    micro-batch loop via foreachBatch) and this sink's commit
-    protocol: executors stage one temp file per partition (the same
-    ``_write_partition`` the DataSource writer runs), the driver
-    publishes them under this ``batch_id`` — so a micro-batch REPLAYED
-    after a checkpoint rollback is a no-op, exactly like the
-    ``DataSourceStreamWriter`` path.
-
-    The ``mapPartitions`` hop exists because foreachBatch gives the
-    sink a DataFrame, not a writer task context; the collected commit
-    messages are O(partitions) driver data (file name + counts), the
-    rows themselves never leave the executors."""
-    os.makedirs(path, exist_ok=True)
-    messages = df.rdd.mapPartitions(
-        lambda it, p=path: [_write_partition(p, it)]
-    ).collect()
-    _commit_files(path, messages, batch_id)
+    """``foreachBatch`` adapter — the composition point between
+    ``StreamProcessor`` (which owns the micro-batch loop) and this
+    sink's commit protocol. A ``batch_id`` already in the manifest
+    returns before any Spark job; otherwise Spark's parquet writer
+    stages the batch and the driver publishes its parts under this
+    ``batch_id``. Going through the Python DataSource instead would
+    add planner round trips to every batch."""
+    if batch_id in _manifest_batches(path):
+        return
+    stage = uuid.uuid4().hex
+    stage_dir = os.path.join(path, "tmp", stage)
+    df.write.parquet(stage_dir)
+    parts = [f for f in sorted(os.listdir(stage_dir)) if f.endswith(".parquet")]
+    _commit_files(path, [GzkCommitMessage(os.path.join(stage, f)) for f in parts], batch_id)
+    shutil.rmtree(stage_dir)
 
 
 def read_committed(path: str) -> list[dict]:
     """Read back ONLY manifested rows (the sink's visibility rule);
-    torn trailing manifest lines are skipped, not fatal."""
+    torn trailing manifest lines are skipped, not fatal. Timestamps
+    come back as naive UTC datetimes, what ``collect()`` gives under a
+    UTC session, whichever writer staged them (the JVM's INT96 reads
+    naive, the Arrow writer's tz-aware)."""
     out: list[dict] = []
     for entry in _manifest_entries(path):
         for fname in entry["files"]:
-            with open(os.path.join(path, fname)) as pf:
-                out.extend(json.loads(ln) for ln in pf if ln.strip())
+            t = pq.read_table(os.path.join(path, fname), coerce_int96_timestamp_unit="us")
+            naive = [
+                f.with_type(pa.timestamp("us")) if pa.types.is_timestamp(f.type) else f
+                for f in t.schema
+            ]
+            out.extend(t.cast(pa.schema(naive)).to_pylist())
     return out

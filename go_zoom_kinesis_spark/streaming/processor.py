@@ -31,7 +31,8 @@ Spark mapping:
                       reference's branch semantics
 - checkpoint (K1)   ⇒ store.save_checkpoint(shard, max success seq)
                       per batch, the max folded from each attempt's
-                      outcome rollup (no separate job) + Spark's own
+                      outcome rollup (no separate job) and never below
+                      the stored position + Spark's own
                       checkpointLocation
 - total timeout (T4, src/processor.rs:624-670)
                     ⇒ awaitTermination(timeout) + stop()
@@ -119,7 +120,6 @@ class ProcessorConfig:
     """↔ ProcessorConfig (src/processor.rs:339-385 defaults)."""
 
     checkpoint_location: str
-    batch_size: int = 100  # GetRecords limit analog (src/processor.rs:373)
     max_attempts: int = 3  # bounded soft retries (semantic change, SURVEY §7)
     initial_position: InitialPosition = field(default_factory=TrimHorizon)
     prefer_stored_checkpoint: bool = True  # src/processor.rs:362
@@ -469,17 +469,21 @@ class StreamProcessor:
                 shutdown=self.shutdown,
             )
             for shard, key in positions.items():
-                seq = str(key).lstrip("0") or "0"
+                new = str(key).lstrip("0") or "0"
 
-                def save(attempt: int, shard: str = shard, seq: str = seq):
+                def save(attempt: int, shard: str = shard, new: str = new) -> str:
+                    # monotone: a later batch with a lower max (a replay,
+                    # a restart from an earlier position) never rewinds
                     try:
+                        old = self.store.get_checkpoint(shard)
+                        seq = new if old is None or pad_seq(new) > pad_seq(old) else old
                         self.store.save_checkpoint(shard, seq)
+                        return seq
                     except Exception:
                         agg.emit(shard, M.CHECKPOINT_FAILURE, attempt=attempt)
                         raise
 
-                handle.retry(save)
-                agg.emit(shard, M.CHECKPOINT_SUCCESS, seq=seq)
+                agg.emit(shard, M.CHECKPOINT_SUCCESS, seq=handle.retry(save))
                 n_ckpt += 1
 
         if batch_stats is not None:

@@ -76,7 +76,6 @@ _activate_pbshim()
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     from go_zoom_kinesis_spark.session import get_spark
 
     spark = get_spark(app_name="gzk-tests", shuffle_partitions=8)

@@ -116,13 +116,10 @@ def test_full_loop_with_rollback_and_state_readback(spark, tmp_path):
     assert {(r["shard_id"], r["sequence_number"]) for r in committed} == {
         (r["shard_id"], r["sequence_number"]) for r in exp1.collect()
     }
-    # manifest fold == batch fold (per-batch max committed sequence)
+    # one manifest line for the batch, counting its rows
     manifest = gzk_sink._manifest_entries(sink_path)
     assert [e["batch_id"] for e in manifest] == [0]
     assert manifest[0]["n_rows"] == exp1.count()
-    assert manifest[0]["checkpoint_seq"] == (
-        exp1.agg(F.max("sequence_number")).collect()[0][0]
-    )
     # durable KV == per-shard batch fold
     exp_ckpt = {
         r["shard_id"]: str(r["mx"])

@@ -1,18 +1,22 @@
-"""Two-phase checkpoint sink (Python DataSource writer API): batch and
-streaming writes publish only driver-committed files, and a replayed
-micro-batch commit is a no-op."""
+"""Two-phase manifest sink: the Arrow DataSource writers (batch and
+streaming) and ``commit_batch`` publish only driver-committed parquet
+parts, and a replayed micro-batch commit is a no-op."""
 
 from __future__ import annotations
 
 import json
 import os
 
+import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 
 from go_zoom_kinesis_spark.io import load_table
+from go_zoom_kinesis_spark.sources import gzk_sink
 from go_zoom_kinesis_spark.sources.gzk_sink import (
-    GzkCommitMessage,
     _commit_files,
+    _write_batches,
+    commit_batch,
     read_committed,
     register,
 )
@@ -30,6 +34,11 @@ def _events_slice(spark, sf_dir):
     )
 
 
+def _stage(path, rows):
+    """Stage ``rows`` the way a DataSource writer task does."""
+    return _write_batches(path, [pa.RecordBatch.from_pylist(rows)])
+
+
 def test_batch_write_commits_all_partitions(spark, sf_dir, tmp_path):
     register(spark)
     path = str(tmp_path / "sink_batch")
@@ -42,11 +51,9 @@ def test_batch_write_commits_all_partitions(spark, sf_dir, tmp_path):
     assert sorted(rows, key=key) == sorted(exp, key=key)
     # phase-2 visibility rule: nothing left un-published
     assert os.listdir(os.path.join(path, "tmp")) == []
-    # manifest checkpoint fold = max sequence across partitions
     with open(os.path.join(path, "_manifest.jsonl")) as f:
         entries = [json.loads(line) for line in f]
     assert len(entries) == 1
-    assert entries[0]["checkpoint_seq"] == max(e["sequence_number"] for e in exp)
     assert entries[0]["n_rows"] == len(exp)
 
 
@@ -81,27 +88,20 @@ def test_replayed_batch_commit_is_noop(tmp_path):
     """The at-least-once contract: re-committing an already-manifested
     batchId publishes nothing and drops the replayed temp files."""
     path = str(tmp_path / "sink_replay")
-    os.makedirs(os.path.join(path, "tmp"))
 
-    def stage(fname, rows):
-        with open(os.path.join(path, "tmp", fname), "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-        return GzkCommitMessage(fname, len(rows), max(r["sequence_number"] for r in rows))
-
-    m1 = stage("a.part.jsonl", [{"sequence_number": 1}, {"sequence_number": 7}])
+    m1 = _stage(path, [{"sequence_number": 1}, {"sequence_number": 7}])
     _commit_files(path, [m1], 0)
     assert len(read_committed(path)) == 2
 
     # micro-batch 0 replays after a checkpoint rollback: same batchId,
     # fresh temp file — must NOT double-publish
-    m2 = stage("b.part.jsonl", [{"sequence_number": 1}, {"sequence_number": 7}])
+    m2 = _stage(path, [{"sequence_number": 1}, {"sequence_number": 7}])
     _commit_files(path, [m2], 0)
     assert len(read_committed(path)) == 2
     assert os.listdir(os.path.join(path, "tmp")) == []
 
     # a NEW batch still publishes
-    m3 = stage("c.part.jsonl", [{"sequence_number": 9}])
+    m3 = _stage(path, [{"sequence_number": 9}])
     _commit_files(path, [m3], 1)
     assert len(read_committed(path)) == 3
 
@@ -114,17 +114,8 @@ def test_torn_manifest_line_tolerated(tmp_path):
     from go_zoom_kinesis_spark.sources.gzk_sink import MANIFEST, _manifest_batches
 
     path = str(tmp_path / "sink_torn")
-    os.makedirs(os.path.join(path, "tmp"))
 
-    def stage(fname, rows):
-        with open(os.path.join(path, "tmp", fname), "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-        return GzkCommitMessage(
-            fname, len(rows), max(r["sequence_number"] for r in rows)
-        )
-
-    _commit_files(path, [stage("a.part.jsonl", [{"sequence_number": 1}])], 0)
+    _commit_files(path, [_stage(path, [{"sequence_number": 1}])], 0)
     # simulate the crash: torn half-written line at the tail
     with open(os.path.join(path, MANIFEST), "a") as f:
         f.write('{"batch_id": 1, "files": ["b.part.jso')
@@ -133,7 +124,7 @@ def test_torn_manifest_line_tolerated(tmp_path):
     assert len(read_committed(path)) == 1
     # the recovery commit (replay of batch 1) must succeed and heal the
     # manifest (atomic rewrite drops the torn line)
-    _commit_files(path, [stage("b.part.jsonl", [{"sequence_number": 2}])], 1)
+    _commit_files(path, [_stage(path, [{"sequence_number": 2}])], 1)
     assert _manifest_batches(path) == {0, 1}
     assert len(read_committed(path)) == 2
     with open(os.path.join(path, MANIFEST)) as f:
@@ -165,5 +156,56 @@ def test_batch_overwrite_mode_truncates(spark, sf_dir, tmp_path):
     manifested = {f for e in __import__(
         "go_zoom_kinesis_spark.sources.gzk_sink", fromlist=["_manifest_entries"]
     )._manifest_entries(path) for f in e["files"]}
-    on_disk = {f for f in os.listdir(path) if f.endswith(".part.jsonl")}
+    on_disk = {f for f in os.listdir(path) if f.endswith(".parquet")}
     assert on_disk == manifested
+
+
+def _typed_frame(spark):
+    # a string sequence, a timestamp and an all-null column
+    return spark.range(0, 30, numPartitions=3).selectExpr(
+        "CAST(id AS STRING) AS sequence_number",
+        "timestamp_seconds(id * 3601 + 1700000000.123456) AS ts",
+        "CAST(NULL AS STRING) AS partition_key",
+    )
+
+
+def _sorted(rows):
+    return sorted(rows, key=lambda d: d["sequence_number"])
+
+
+def test_read_back_same_for_both_staging_paths(spark, tmp_path):
+    """``read_committed`` returns what ``collect()`` returns under the
+    UTC session, whether Spark's parquet writer (``commit_batch``) or
+    the Arrow DataSource writer staged the frame."""
+    register(spark)
+    df = _typed_frame(spark)
+    commit_batch(df, str(tmp_path / "jvm"), 0)
+    df.write.format("gzk_checkpoint_sink").mode("append").save(str(tmp_path / "arrow"))
+    exp = _sorted(r.asDict() for r in df.collect())
+    for staged_by in ("jvm", "arrow"):
+        assert _sorted(read_committed(str(tmp_path / staged_by))) == exp
+
+
+def test_manifest_crash_after_publish_replays_exactly_once(spark, tmp_path, monkeypatch):
+    """A driver crash after the publish, before the manifest append:
+    none of the batch is visible, the replay commits it once, and the
+    orphaned parts are never read."""
+    path, df = str(tmp_path / "sink_crash"), _typed_frame(spark)
+    append, entries = gzk_sink._append_manifest, []
+
+    def crash_once(p, entry):
+        entries.append(entry)
+        if len(entries) == 1:
+            raise OSError("driver died before the manifest append")
+        append(p, entry)
+
+    monkeypatch.setattr(gzk_sink, "_append_manifest", crash_once)
+    with pytest.raises(OSError):
+        commit_batch(df, path, 0)
+    orphans = set(entries[0]["files"])
+    assert orphans <= set(os.listdir(path)) and read_committed(path) == []
+    commit_batch(df, path, 0)  # the replay
+    commit_batch(None, path, 0)  # committed: returns before touching the frame
+    assert [e["batch_id"] for e in gzk_sink._manifest_entries(path)] == [0]
+    assert orphans and not orphans & set(entries[1]["files"])
+    assert _sorted(read_committed(path)) == _sorted(r.asDict() for r in df.collect())

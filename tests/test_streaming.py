@@ -273,6 +273,22 @@ def test_checkpoint_is_max_success_seq(spark, tmp_path, records):
     assert store.all_checkpoints() == expected
 
 
+def test_checkpoint_save_never_rewinds(spark, tmp_path):
+    """A later batch with a lower max leaves the stored position alone
+    (string sequences, compared padded), one save per shard per batch."""
+    store, agg = InMemoryCheckpointStore(), MetricsAggregator()
+    proc, _, _ = make_processor(
+        spark, tmp_path, store=store, aggregator=agg, prefer_stored_checkpoint=False
+    )
+    for epoch, hi in enumerate((100, 60)):
+        batch = spark.range(1, hi + 1).selectExpr(
+            "'s-0' AS shard_id", "CAST(id AS STRING) AS sequence_number", "'view' AS event_type"
+        )
+        proc.run_batch(batch, epoch)
+    assert store.all_checkpoints() == {"s-0": "100"}
+    assert agg.event_types().count(M.CHECKPOINT_SUCCESS) == 2
+
+
 def test_checkpoint_preferred_resume(spark, tmp_path, records):
     store = InMemoryCheckpointStore()
     ckpt = 500

@@ -12,9 +12,10 @@ GetRecords returns at most 10k records / 10 MB per call per shard,
 with 5 calls/s/shard (AWS service quotas; the reference adds no
 batching beyond ``batch_size``, /root/reference/src/client.rs:167-233).
 A consumer saturating 8 shards therefore tops out well under ~400k
-records/s regardless of CPU. This benchmark shows the Spark harness
-clearing that bound on local[32] while ALSO running the retry/
-validation/checkpoint semantics per batch.
+records/s regardless of CPU. This benchmark measures the Spark harness
+against that bound on ``local[N]``, N = ``session.local_cpus()`` (the
+CPUs the process may use), while ALSO running the retry/validation/
+checkpoint semantics per batch.
 
 Usage:
     python tools/bench_streaming.py [--records 2000000] [--shards 8]

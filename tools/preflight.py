@@ -107,7 +107,7 @@ def main():
 
     import __spark_entry__ as entry
     from go_zoom_kinesis_spark.io import TABLES
-    from go_zoom_kinesis_spark.session import local_cpus
+    from go_zoom_kinesis_spark.session import get_spark
 
     queries = entry.queries()
     oracles = entry.oracle_sql()
@@ -116,15 +116,7 @@ def main():
         wanted = args.only.split(",")
         names = [n for n in names if n in wanted]
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{local_cpus()}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "8g")
-        .appName("preflight")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="preflight")
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(SF_DIR, f"{t}.parquet")
