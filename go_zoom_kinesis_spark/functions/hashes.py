@@ -16,7 +16,7 @@ product below 2^63.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
@@ -67,6 +67,46 @@ def char_hash_col(s: Column) -> Column:
 
 def affine_col(h: Column, i: int) -> Column:
     return (h * A[i] + B[i]) % P
+
+
+def shingle_hashes_col(text: Column) -> Column:
+    """Distinct word-3-gram shingle hashes of ``text``: array<long>,
+    empty for docs with fewer than 3 tokens. Shingling, hashing and
+    dedup all run inside one projection (no explode, no shuffle)."""
+    return F.array_distinct(F.transform(shingles_col(tokens_col(text)), char_hash_col))
+
+
+def minhash_bands(df: DataFrame, hs: str) -> DataFrame:
+    """Banded MinHash signatures of the shingle-hash array column
+    ``hs``: (``df``'s columns except ``hs``) + (band_idx, band_key),
+    one row per band; rows with an empty ``hs`` are dropped. The
+    signature comes straight from the array — ``array_min(transform)``
+    per hash family, zero shuffles (vs explode + 16-way groupBy-min);
+    bands are a ``stack`` (generator, no shuffle either). Pure per-row
+    codegen, so it serves batch and streaming frames alike."""
+
+    def _affine(i: int):
+        # single-arg lambda: F.transform feeds the index to 2-arg lambdas
+        return lambda h: affine_col(h, i)
+
+    sig = df.filter(F.size(hs) > 0).select(
+        "*",
+        *[
+            F.array_min(F.transform(hs, _affine(i))).alias(f"mh{i}")
+            for i in range(NUM_HASHES)
+        ],
+    )
+    bands = ", ".join(
+        f"{b}, concat_ws('-', "
+        + ",".join(f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND))
+        + ")"
+        for b in range(NUM_BANDS)
+    )
+    mh = ",".join(f"mh{i}" for i in range(NUM_HASHES))
+    return sig.selectExpr(
+        f"* except({hs}, {mh})",
+        f"stack({NUM_BANDS}, {bands}) as (band_idx, band_key)",
+    )
 
 
 def horner_windows_col(th: Column, n: int) -> Column:

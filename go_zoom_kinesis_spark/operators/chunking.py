@@ -31,7 +31,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import hashes as H
@@ -352,6 +352,29 @@ BPE_R = "\x03"  # like the multimodal ASCII guard — control chars are not
 #                 vocabulary; both fuzz modes generate word-list corpora)
 
 
+def _bpe_wrap(w: Column) -> Column:
+    """A word's initial symbol sequence: every character wrapped as
+    ``\\x02ch\\x03``."""
+    return F.concat_ws(
+        "",
+        F.transform(
+            F.split(w, ""),
+            lambda ch: F.concat(F.lit(BPE_L), ch, F.lit(BPE_R)),
+        ),
+    )
+
+
+def _bpe_merge(seq: Column, l: str, r: str) -> Column:
+    """Apply the merge (l, r) to a wrapped symbol sequence: ONE literal
+    left-to-right replace of the two wrapped symbols by the wrapped
+    merged symbol."""
+    return F.replace(
+        seq,
+        F.lit(BPE_L + l + BPE_R + BPE_L + r + BPE_R),
+        F.lit(BPE_L + l + r + BPE_R),
+    )
+
+
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The actual BPE TRAINING loop (Sennrich et al. ACL'16, public
     literature) — ``bpe_pair_stats`` counts one round of pairs; this
@@ -387,57 +410,49 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count("*").alias("c"))
     )
-    wrap = F.concat_ws(
-        "",
-        F.transform(
-            F.split("w", ""),
-            lambda ch: F.concat(F.lit(BPE_L), ch, F.lit(BPE_R)),
-        ),
-    )
-    words = wc.select(wrap.alias("seq"), "c").cache()
-    rows = []
-    for step in range(1, N_BPE_MERGES + 1):
-        syms = F.split(
-            F.expr("substring(seq, 2, length(seq) - 2)"), BPE_R + BPE_L
-        )
-        pairs = (
-            words.select("c", syms.alias("s"))
-            .select(
-                "c",
-                F.explode(
-                    # sequence(1, k) with k < 1 counts DOWN in Spark —
-                    # guard single-symbol words (same rule as shingles_col)
-                    F.expr(
-                        "CASE WHEN size(s) >= 2 THEN "
-                        "transform(sequence(1, size(s) - 1), "
-                        "i -> struct(element_at(s, i) AS l, "
-                        "element_at(s, i + 1) AS r)) "
-                        "ELSE CAST(array() AS "
-                        "array<struct<l: string, r: string>>) END"
-                    )
-                ).alias("p"),
+    # every merge step re-reads the wrapped word-type table; the cache
+    # is released before returning, since the result holds only the
+    # collected merge rows
+    cached = wc.select(_bpe_wrap(F.col("w")).alias("seq"), "c").cache()
+    words, rows = cached, []
+    try:
+        for step in range(1, N_BPE_MERGES + 1):
+            syms = F.split(
+                F.expr("substring(seq, 2, length(seq) - 2)"), BPE_R + BPE_L
             )
-            .select("c", "p.l", "p.r")
-        )
-        top = (
-            pairs.groupBy("l", "r")
-            .agg(F.sum("c").alias("pc"))
-            .orderBy(F.desc("pc"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        l, r, pc = top[0]["l"], top[0]["r"], top[0]["pc"]
-        rows.append((step, l, r, l + r, pc))
-        words = words.select(
-            F.replace(
-                F.col("seq"),
-                F.lit(BPE_L + l + BPE_R + BPE_L + r + BPE_R),
-                F.lit(BPE_L + l + r + BPE_R),
-            ).alias("seq"),
-            "c",
-        )
+            pairs = (
+                words.select("c", syms.alias("s"))
+                .select(
+                    "c",
+                    F.explode(
+                        # sequence(1, k) with k < 1 counts DOWN in Spark —
+                        # guard single-symbol words (same rule as shingles_col)
+                        F.expr(
+                            "CASE WHEN size(s) >= 2 THEN "
+                            "transform(sequence(1, size(s) - 1), "
+                            "i -> struct(element_at(s, i) AS l, "
+                            "element_at(s, i + 1) AS r)) "
+                            "ELSE CAST(array() AS "
+                            "array<struct<l: string, r: string>>) END"
+                        )
+                    ).alias("p"),
+                )
+                .select("c", "p.l", "p.r")
+            )
+            top = (
+                pairs.groupBy("l", "r")
+                .agg(F.sum("c").alias("pc"))
+                .orderBy(F.desc("pc"), F.asc("l"), F.asc("r"))
+                .limit(1)
+                .collect()
+            )
+            if not top:
+                break
+            l, r, pc = top[0]["l"], top[0]["r"], top[0]["pc"]
+            rows.append((step, l, r, l + r, pc))
+            words = words.select(_bpe_merge(F.col("seq"), l, r).alias("seq"), "c")
+    finally:
+        cached.unpersist()
     schema = (
         "step int, left_sym string, right_sym string, "
         "merged_sym string, pair_count long"
@@ -550,23 +565,9 @@ def tokenizer_apply_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang", "w")
         .agg(F.count("*").alias("c"))
     )
-    wrap = F.concat_ws(
-        "",
-        F.transform(
-            F.split("w", ""),
-            lambda ch: F.concat(F.lit(BPE_L), ch, F.lit(BPE_R)),
-        ),
-    )
-    dic = lw.select("w").distinct().select("w", wrap.alias("seq"))
+    dic = lw.select("w").distinct().select("w", _bpe_wrap(F.col("w")).alias("seq"))
     for l, r in merges:
-        dic = dic.select(
-            "w",
-            F.replace(
-                F.col("seq"),
-                F.lit(BPE_L + l + BPE_R + BPE_L + r + BPE_R),
-                F.lit(BPE_L + l + r + BPE_R),
-            ).alias("seq"),
-        )
+        dic = dic.select("w", _bpe_merge(F.col("seq"), l, r).alias("seq"))
     nsym = (
         F.length("seq") - F.length(F.replace(F.col("seq"), F.lit(BPE_L)))
     ).cast("long")

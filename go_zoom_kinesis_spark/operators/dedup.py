@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..functions import hashes as H
 from ..io import fan_out_narrow, load_table
 from ..persist import pin
+from .simjoin import prefix_pairs, rarity_prefix
 
 JACCARD_THRESHOLD = 0.5  # minhash verify threshold
 NGRAM_THRESHOLD = 0.3  # exact n-gram jaccard report threshold
@@ -59,24 +60,16 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shingle_arrays(docs: DataFrame) -> DataFrame:
-    """(doc_id, hs: array<long>) — distinct word-3-gram shingle hashes
-    kept as ONE array per document. Shingling, hashing and dedup all
-    happen inside a single projection (no explode, no shuffle); the
-    exploded relation is derived from this when a per-shingle join is
-    genuinely needed (candidate generation)."""
-    toks = H.tokens_col(F.col("text"))
-    docs = fan_out_narrow(docs)
-    return docs.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(H.shingles_col(toks), H.char_hash_col)
-        ).alias("hs"),
+    """(doc_id, hs: array<long>) — ``H.shingle_hashes_col`` kept as ONE
+    array per document; the exploded relation is derived from this
+    when a per-shingle join is genuinely needed (candidate
+    generation)."""
+    return fan_out_narrow(docs).select(
+        "doc_id", H.shingle_hashes_col(F.col("text")).alias("hs")
     )
 
 
-def _pair_jaccard(
-    cand: DataFrame, arrs: DataFrame, dict_join_hint: str | None = None
-) -> DataFrame:
+def _pair_jaccard(cand: DataFrame, arrs: DataFrame) -> DataFrame:
     """Exact jaccard for candidate (doc_a, doc_b) pairs: join the pair
     list against the per-doc shingle-array dictionary and intersect the
     arrays in-row.
@@ -84,21 +77,18 @@ def _pair_jaccard(
     Scale note: this replaces a candidates×shingles exploded join
     (|cand|·~50 rows through two shuffles) with two joins that carry one
     array per row. The dictionary is first semi-joined down to only the
-    docs that appear in a candidate pair (∝ near-dups, not corpus size),
-    then joined per the caller's ``dict_join_hint``, because the right
-    strategy is a property of the CALLER's verify-input cardinality —
-    measured on the sf10 fourth decade (600k docs), not guessed. Both
-    current callers keep pair lists ∝ true near-dups (LSH bands /
-    the intersection-bound prune), where AQE's runtime broadcast
-    conversion is right at every measured sf and forcing SHJ is a
-    flat ~0.6 s tax (0.27→0.80 s at sf1, 0.30→0.93 s at sf10) for two
+    docs that appear in a candidate pair (∝ near-dups, not corpus size).
+    The join strategy is left to AQE: every caller keeps pair lists ∝
+    true near-dups (LSH bands / the intersection-bound prune), where
+    AQE's runtime broadcast conversion is right at every measured sf
+    (on the sf10 fourth decade, 600k docs) and forcing SHJ is a flat
+    ~0.6 s tax (0.27→0.80 s at sf1, 0.30→0.93 s at sf10) for two
     shuffles of a dictionary a broadcast carries for free. A caller
-    that DOES ship a corpus-scale pair relation should pass
-    ``"shuffle_hash"``: the dict is the canonical hash-build side
-    (partition-local after the shuffle), while sort-merge — Spark's
-    default once the dict outgrows a broadcast — re-sorts the
-    array-carrying pair relation: measured SMJ 20.7 s vs SHJ 10.5 s
-    warm at sf10 on the pre-prune 11.2M-pair formulation."""
+    that ships a corpus-scale pair relation would want the
+    ``shuffle_hash`` hint on the dictionary sides instead: sort-merge
+    — Spark's default once the dict outgrows a broadcast — re-sorts
+    the array-carrying pair relation: measured SMJ 20.7 s vs SHJ
+    10.5 s warm at sf10 on the pre-prune 11.2M-pair formulation."""
     # materialize: cand (the expensive candidate-generation join)
     # feeds the two semi-join branches AND the verify join — left lazy
     # the whole upstream recomputes three times. localCheckpoint, not
@@ -121,8 +111,6 @@ def _pair_jaccard(
     b = dict_small.select(
         F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b")
     )
-    if dict_join_hint:
-        a, b = a.hint(dict_join_hint), b.hint(dict_join_hint)
     return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
@@ -135,39 +123,6 @@ def _pair_jaccard(
 
 
 # --- minhash + LSH ------------------------------------------------------
-
-
-def _minhash_bands(arrs: DataFrame) -> DataFrame:
-    """(doc_id, band_idx, band_key) — banded MinHash signatures from
-    the per-doc shingle-hash arrays. Signatures come straight from the
-    array — ``array_min(transform(...))`` per hash family, zero
-    shuffles (vs explode + 16-way groupBy-min); bands are a ``stack``
-    (generator, no shuffle either). Shared by the self-join
-    (``dedup_minhash_lsh``), the incremental batch-vs-corpus join
-    (``dedup_incremental_lsh``) and the recall audit
-    (``lsh_recall_audit``)."""
-
-    def _affine(i: int):
-        # single-arg lambda: F.transform feeds the index to 2-arg lambdas
-        return lambda h: H.affine_col(h, i)
-
-    sig = arrs.filter(F.size("hs") > 0).select(
-        "doc_id",
-        *[
-            F.array_min(F.transform("hs", _affine(i))).alias(f"mh{i}")
-            for i in range(H.NUM_HASHES)
-        ],
-    )
-    band_exprs = []
-    for b in range(H.NUM_BANDS):
-        cols = ",".join(
-            f"mh{b * H.ROWS_PER_BAND + r}" for r in range(H.ROWS_PER_BAND)
-        )
-        band_exprs.append(f"{b}, concat_ws('-', {cols})")
-    return sig.selectExpr(
-        "doc_id",
-        f"stack({H.NUM_BANDS}, {', '.join(band_exprs)}) as (band_idx, band_key)",
-    )
 
 
 def _lsh_candidate_pairs(bands: DataFrame) -> DataFrame:
@@ -192,7 +147,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     for candidates, exact jaccard verification ≥ 0.5."""
     docs = _docs(spark, sf_dir)
     arrs = _shingle_arrays(docs).transform(pin)
-    cand = _lsh_candidate_pairs(_minhash_bands(arrs))
+    cand = _lsh_candidate_pairs(H.minhash_bands(arrs, "hs"))
     jac = _pair_jaccard(cand, arrs)
     return jac.filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD).select(
         "doc_a", "doc_b", F.round("jaccard_raw", 6).alias("jaccard")
@@ -1227,7 +1182,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold, same flood caps as ``dedup_minhash_lsh``."""
     docs = _docs(spark, sf_dir)
     arrs = _shingle_arrays(docs).transform(pin)
-    bands = _minhash_bands(arrs)
+    bands = H.minhash_bands(arrs, "hs")
     incoming = bands.filter(
         F.col("doc_id") % INCR_MOD == INCR_SLOT
     ).select(F.col("doc_id").alias("doc_a"), "band_idx", "band_key")
@@ -1295,8 +1250,9 @@ RECALL_AUDIT_SLOT = 0
 
 def _exact_pairs_ppjoin(arrs: DataFrame) -> DataFrame:
     """ALL (doc_a < doc_b) pairs with shingle-hash Jaccard ≥ θ — the
-    prefix-filter method (Vernica et al. SIGMOD'10, same machinery as
-    ``simjoin.similarity_prefix_join`` but over the HASH domain the
+    prefix-filter method (Vernica et al. SIGMOD'10): the
+    ``simjoin.rarity_prefix`` and ``simjoin.prefix_pairs`` stages of
+    ``simjoin.similarity_prefix_join``, run over the HASH domain the
     MinHash path signs, so the ground truth is exactly the relation LSH
     approximates). No false negatives: a true pair must share one of
     each side's ``sz - ceil(θ·sz) + 1`` rarest hashes, and the
@@ -1305,52 +1261,11 @@ def _exact_pairs_ppjoin(arrs: DataFrame) -> DataFrame:
     (same filter expression as ``dedup_minhash_lsh``'s verify, so
     truth and LSH agree on the boundary bit-for-bit)."""
     sh = arrs.select("doc_id", F.explode("hs").alias("shash"))
-    w_doc = Window.partitionBy("doc_id")
-    ranked = (
-        sh.withColumn("df", F.count("*").over(Window.partitionBy("shash")))
-        .withColumn("sz", F.count("*").over(w_doc))
-        .withColumn(
-            "pos",
-            F.row_number().over(w_doc.orderBy(F.asc("df"), F.asc("shash"))),
-        )
-    )
-    ceil_theta = F.floor(
-        (F.col("sz") * _RA_TN + (_RA_TD - 1)) / _RA_TD
-    )
     # materialize: both candidate-join sides read the prefix relation
     # — the same discipline simjoin.similarity_prefix_join applies
     # (checkpoint not cache, r11: block lifetime = query lifetime)
-    prefix = ranked.filter(
-        F.col("pos") <= F.col("sz") - ceil_theta + 1
-    ).transform(pin)
-    a = prefix.select(
-        F.col("doc_id").alias("doc_a"),
-        "shash",
-        F.col("sz").alias("a_sz"),
-        F.col("pos").alias("a_pos"),
-    )
-    b = prefix.select(
-        F.col("doc_id").alias("doc_b"),
-        "shash",
-        F.col("sz").alias("b_sz"),
-        F.col("pos").alias("b_pos"),
-    )
-    ub = 1 + F.least(
-        F.col("a_sz") - F.col("a_pos"), F.col("b_sz") - F.col("b_pos")
-    )
-    cand = (
-        a.join(b, "shash")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .filter(
-            _RA_TD * F.least("a_sz", "b_sz")
-            >= _RA_TN * F.greatest("a_sz", "b_sz")
-        )
-        .filter(
-            (_RA_TN + _RA_TD) * ub >= _RA_TN * (F.col("a_sz") + F.col("b_sz"))
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    prefix = rarity_prefix(sh, "shash", _RA_TN, _RA_TD).transform(pin)
+    cand = prefix_pairs(prefix, "shash", "doc_a", "doc_b", _RA_TN, _RA_TD)
     return (
         _pair_jaccard(cand, arrs)
         .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
@@ -1432,7 +1347,7 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     arrs = _shingle_arrays(docs).transform(pin)
     truth = _exact_pairs_ppjoin(arrs).withColumn("t", F.lit(1))
-    cand = _lsh_candidate_pairs(_minhash_bands(arrs)).withColumn(
+    cand = _lsh_candidate_pairs(H.minhash_bands(arrs, "hs")).withColumn(
         "c", F.lit(1)
     )
     j = truth.join(cand, ["doc_a", "doc_b"], "full_outer")
@@ -1613,7 +1528,7 @@ def dedup_two_tier_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize: bands feeds the bucket-min aggregate, the per-doc
     # flag join, and both candidate sides — left lazy it would
     # re-minhash the corpus four times (checkpoint not cache, r11)
-    bands = _minhash_bands(arrs).transform(pin)
+    bands = H.minhash_bands(arrs, "hs").transform(pin)
     bmin = bands.groupBy("band_idx", "band_key").agg(
         F.min("doc_id").alias("first_doc")
     )

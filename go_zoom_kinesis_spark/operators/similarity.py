@@ -229,6 +229,34 @@ IVF_NPROBE = 2
 IVF_TOP_K = 3
 
 
+def _centroid_ranks(emb: DataFrame) -> DataFrame:
+    """Every vector of ``emb`` (a ``_with_norm`` relation) scored
+    against the ``IVF_CENTROIDS`` coarse-quantizer centroids (the
+    lowest vec_ids — deterministic seed vectors standing in for
+    trained centroids): ``emb``'s columns plus c_id, c_emb, c_norm,
+    the cosine ``c_cos`` and its per-vector rank ``c_rk`` (1 =
+    nearest; ties to the smaller c_id). A broadcast-centroids
+    map-side pass, O(n·K) rows, no shuffle before the rank window."""
+    cent = emb.filter(F.col("vec_id") < IVF_CENTROIDS).select(
+        F.col("vec_id").alias("c_id"),
+        F.col("emb").alias("c_emb"),
+        F.col("norm").alias("c_norm"),
+    )
+    return (
+        emb.join(F.broadcast(cent))
+        .withColumn(
+            "c_cos",
+            _dot(F.col("emb"), F.col("c_emb")) / (F.col("norm") * F.col("c_norm")),
+        )
+        .withColumn(
+            "c_rk",
+            F.row_number().over(
+                Window.partitionBy("vec_id").orderBy(F.desc("c_cos"), F.asc("c_id"))
+            ),
+        )
+    )
+
+
 def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: a 16-vector coarse quantizer (deterministic seed
     vectors stand in for trained centroids — identical join shape),
@@ -245,29 +273,10 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     while CacheManager entries outlive the query until an explicit
     unpersist and accumulate across a 244-query sweep (ADVICE r10)."""
     emb = _with_norm(_emb(spark, sf_dir))
-    cent = emb.filter(F.col("vec_id") < IVF_CENTROIDS).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("emb").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
     # one centroid-scoring pass serves both the inverted-list assignment
     # (rank 1 for every vector) and the query probe lists (rank ≤ nprobe
     # for query vectors)
-    scored_cent = (
-        emb.join(F.broadcast(cent))
-        .withColumn(
-            "c_cos",
-            _dot(F.col("emb"), F.col("c_emb")) / (F.col("norm") * F.col("c_norm")),
-        )
-        .withColumn(
-            "c_rk",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(F.desc("c_cos"), F.asc("c_id"))
-            ),
-        )
-        .select("vec_id", "c_id", "c_rk")
-        .transform(pin)
-    )
+    scored_cent = _centroid_ranks(emb).select("vec_id", "c_id", "c_rk").transform(pin)
     assign = scored_cent.filter(F.col("c_rk") == 1).select(
         "vec_id", F.col("c_id").alias("bucket")
     )
@@ -479,23 +488,8 @@ def semantic_dedup_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike embedding-NN dedup which needs the blocked all-pairs kernel.
     """
     emb = _with_norm(_emb(spark, sf_dir))
-    cent = emb.filter(F.col("vec_id") < IVF_CENTROIDS).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("emb").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
     assign = (
-        emb.join(F.broadcast(cent))
-        .withColumn(
-            "c_cos",
-            _dot(F.col("emb"), F.col("c_emb")) / (F.col("norm") * F.col("c_norm")),
-        )
-        .withColumn(
-            "c_rk",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(F.desc("c_cos"), F.asc("c_id"))
-            ),
-        )
+        _centroid_ranks(emb)
         .filter(F.col("c_rk") == 1)
         .select("vec_id", F.col("c_id").alias("bucket"), "label")
     )
@@ -855,6 +849,57 @@ PQ_K = 16  # centroids per subspace (codebook = vec_id < PQ_K)
 PQ_FP = 1_000_000_000  # fixed-point scale for order-free SSE sums
 
 
+def _pq_code_pairs(emb: DataFrame) -> DataFrame:
+    """(vec_id, sub, cid, d2): every vector of ``emb`` split into
+    ``PQ_M`` subvectors of width ``dim div PQ_M`` (trailing remainder
+    dims excluded), each scored against the ``PQ_K`` codebook
+    centroids of its subspace (the subvectors of the ``PQ_K`` lowest
+    vec_ids, broadcast) as squared L2 ``d2`` — a sequential zip_with
+    fold, bit-identical to the oracle's list_reduce."""
+    base = emb.select(
+        "vec_id",
+        "emb",
+        F.floor(F.size("emb") / PQ_M).cast("int").alias("subd"),
+    )
+    subs = base.select(
+        "vec_id",
+        F.explode(F.array(*[F.lit(i) for i in range(PQ_M)])).alias("sub"),
+        "emb",
+        "subd",
+    ).select(
+        "vec_id",
+        "sub",
+        F.slice(
+            F.col("emb"), F.col("sub") * F.col("subd") + 1, F.col("subd")
+        ).alias("sv"),
+    )
+    cents = subs.filter(F.col("vec_id") < PQ_K).select(
+        "sub", F.col("vec_id").alias("cid"), F.col("sv").alias("cv")
+    )
+    d2 = F.aggregate(
+        F.zip_with("sv", "cv", lambda a, b: (a - b) * (a - b)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return subs.join(F.broadcast(cents), "sub").select(
+        "vec_id", "sub", "cid", d2.alias("d2")
+    )
+
+
+def _pq_encode(code_pairs: DataFrame) -> DataFrame:
+    """(vec_id, sub, cid, d2): each subvector's nearest codebook
+    centroid — argmin via struct-min aggregation (d2, then the smaller
+    cid; no window over the corpus)."""
+    return (
+        code_pairs.select(
+            "vec_id", "sub", F.struct(F.col("d2"), F.col("cid")).alias("s")
+        )
+        .groupBy("vec_id", "sub")
+        .agg(F.min("s").alias("m"))
+        .select("vec_id", "sub", F.col("m.cid").alias("cid"), F.col("m.d2").alias("d2"))
+    )
+
+
 def pq_codebook_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization codebook audit — the compression step an
     ANN index (IVF-PQ) runs over every embedding: split each vector
@@ -877,37 +922,8 @@ def pq_codebook_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     same bounded-fanout shape as ``similarity_ivf_topk``; argmin via
     struct-min aggregation (no window over the corpus); output bounded
     by {PQ_M}·{PQ_K} cells."""
-    base = _emb(spark, sf_dir).select(
-        "vec_id",
-        "emb",
-        F.floor(F.size("emb") / PQ_M).cast("int").alias("subd"),
-    )
-    vecs = base.select(
-        "vec_id",
-        F.explode(F.array(*[F.lit(i) for i in range(PQ_M)])).alias("sub"),
-        "emb",
-        "subd",
-    ).select(
-        "vec_id",
-        "sub",
-        F.slice(
-            F.col("emb"), F.col("sub") * F.col("subd") + 1, F.col("subd")
-        ).alias("sv"),
-    )
-    cents = vecs.filter(F.col("vec_id") < PQ_K).select(
-        "sub", F.col("vec_id").alias("cid"), F.col("sv").alias("cv")
-    )
-    d2 = F.aggregate(
-        F.zip_with("sv", "cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    best = (
-        vecs.join(F.broadcast(cents), "sub")
-        .select("vec_id", "sub", F.struct(d2.alias("d2"), "cid").alias("s"))
-        .groupBy("vec_id", "sub")
-        .agg(F.min("s").alias("m"))
-        .select("sub", F.col("m.cid").alias("cid"), F.col("m.d2").alias("d2"))
+    best = _pq_encode(_pq_code_pairs(_emb(spark, sf_dir))).select(
+        "sub", "cid", "d2"
     )
     return (
         best.groupBy("sub", "cid")
@@ -963,46 +979,13 @@ def ivf_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 quiet-host re-A/B: fan=False (0.85 vs 1.04 fanned) — both
     # corpus-sized consumers aggregate immediately, so the exchange
     # outweighs the spread folds
-    base = _emb(spark, sf_dir, fan=False).select(
-        "vec_id",
-        "emb",
-        F.floor(F.size("emb") / PQ_M).cast("int").alias("subd"),
-    )
-    subs = base.select(
-        "vec_id",
-        F.explode(F.array(*[F.lit(i) for i in range(PQ_M)])).alias("sub"),
-        "emb",
-        "subd",
-    ).select(
-        "vec_id",
-        "sub",
-        F.slice(
-            F.col("emb"), F.col("sub") * F.col("subd") + 1, F.col("subd")
-        ).alias("sv"),
-    )
-    cents = subs.filter(F.col("vec_id") < PQ_K).select(
-        "sub", F.col("vec_id").alias("cid"), F.col("sv").alias("cv")
-    )
-    d2 = F.aggregate(
-        F.zip_with("sv", "cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    code_pairs = subs.join(F.broadcast(cents), "sub").select(
-        "vec_id", "sub", "cid", d2.alias("d2")
-    )
-    codes = (
-        code_pairs.select(
-            "vec_id",
-            "sub",
-            F.struct(F.col("d2"), F.col("cid")).alias("s"),
-        )
-        .groupBy("vec_id", "sub")
-        .agg(F.min("s").alias("m"))
-        .select("vec_id", "sub", F.col("m.cid").alias("code"))
+    emb = _emb(spark, sf_dir, fan=False)
+    code_pairs = _pq_code_pairs(emb)
+    codes = _pq_encode(code_pairs).select(
+        "vec_id", "sub", F.col("cid").alias("code")
     )
     # coarse quantizer: full-vector squared L2 to the IVF seed vectors
-    coarse = base.filter(F.col("vec_id") < IVF_CENTROIDS).select(
+    coarse = emb.filter(F.col("vec_id") < IVF_CENTROIDS).select(
         F.col("vec_id").alias("cell_id"), F.col("emb").alias("c_emb")
     )
     cd2 = F.aggregate(
@@ -1010,7 +993,7 @@ def ivf_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    cell_pairs = base.join(F.broadcast(coarse)).select(
+    cell_pairs = emb.join(F.broadcast(coarse)).select(
         "vec_id", "cell_id", cd2.alias("d2")
     )
     cells = (
@@ -1780,29 +1763,7 @@ def _ivf_probe_sweep_build(
         return df.transform(pin) if persist else df
 
     emb = _with_norm(_emb(spark, sf_dir))
-    cent = emb.filter(F.col("vec_id") < IVF_CENTROIDS).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("emb").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
-    scored_cent = (
-        emb.join(F.broadcast(cent))
-        .withColumn(
-            "c_cos",
-            _dot(F.col("emb"), F.col("c_emb"))
-            / (F.col("norm") * F.col("c_norm")),
-        )
-        .withColumn(
-            "c_rk",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(
-                    F.desc("c_cos"), F.asc("c_id")
-                )
-            ),
-        )
-        .select("vec_id", "c_id", "c_rk")
-        .transform(hold)
-    )
+    scored_cent = _centroid_ranks(emb).select("vec_id", "c_id", "c_rk").transform(hold)
     assign = scored_cent.filter(F.col("c_rk") == 1).select(
         "vec_id", F.col("c_id").alias("bucket")
     )

@@ -73,6 +73,100 @@ def _shingle_arr_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def rarity_prefix(sh: DataFrame, elem: str, num: int, den: int) -> DataFrame:
+    """The PPJoin prefix of every set in ``sh`` (doc_id, ``elem``; one
+    row per distinct element): each doc's elements ranked by global
+    rarity (document frequency asc, then element), kept while
+    ``pos <= sz - ceil(θ·sz) + 1`` for θ = ``num``/``den``, in exact
+    integers. Adds ``df``, ``sz`` and ``pos``. df and sz are window
+    counts over the SAME relation — two exchanges total (one per
+    partition key) instead of two groupBy-aggregate shuffles plus
+    their joins back."""
+    w_doc = Window.partitionBy("doc_id")
+    ranked = (
+        sh.withColumn("df", F.count("*").over(Window.partitionBy(elem)))
+        .withColumn("sz", F.count("*").over(w_doc))
+        .withColumn(
+            "pos",
+            F.row_number().over(w_doc.orderBy(F.asc("df"), F.asc(elem))),
+        )
+    )
+    ceil_theta = F.floor((F.col("sz") * num + (den - 1)) / den)
+    return ranked.filter(F.col("pos") <= F.col("sz") - ceil_theta + 1)
+
+
+def prefix_pairs(
+    prefix: DataFrame, elem: str, a_id: str, b_id: str, num: int, den: int
+) -> DataFrame:
+    """Distinct candidate pairs (``a_id`` < ``b_id``) of a
+    ``rarity_prefix`` relation: prefixes sharing an element that pass
+    the size filter ``θ·max(|a|,|b|) ≤ min(|a|,|b|)`` and the PPJoin
+    positional filter, all in integers.
+
+    Overlap needed for J ≥ θ: (NUM+DEN)·|∩| ≥ NUM·(|a|+|b|). Elements
+    of ∩ can only come from THIS match plus what remains after
+    positions (a_pos, b_pos) in the shared rarity order, so
+    |∩| ≤ 1 + min(a_sz − a_pos, b_sz − b_pos). A true pair satisfies
+    the bound at every witness, so filtering each match row keeps
+    completeness while cutting candidates ~100× at θ=0.5 (the bare
+    prefix filter keeps half of every set)."""
+    a = prefix.select(
+        F.col("doc_id").alias(a_id),
+        elem,
+        F.col("sz").alias("a_sz"),
+        F.col("pos").alias("a_pos"),
+    )
+    b = prefix.select(
+        F.col("doc_id").alias(b_id),
+        elem,
+        F.col("sz").alias("b_sz"),
+        F.col("pos").alias("b_pos"),
+    )
+    ub = 1 + F.least(
+        F.col("a_sz") - F.col("a_pos"), F.col("b_sz") - F.col("b_pos")
+    )
+    return (
+        a.join(b, elem)
+        .filter(F.col(a_id) < F.col(b_id))
+        .filter(den * F.least("a_sz", "b_sz") >= num * F.greatest("a_sz", "b_sz"))
+        .filter((num + den) * ub >= num * (F.col("a_sz") + F.col("b_sz")))
+        .select(a_id, b_id)
+        .distinct()
+    )
+
+
+def intersect_sizes(cand: DataFrame, arrs: DataFrame) -> DataFrame:
+    """(a_id, b_id, size_a, size_b, inter_size) for candidate pairs,
+    verified without the pair×shingle blow-up: candidates join each
+    side's COMPACT shingle array by doc key, and the exact intersection
+    runs in-row (array_intersect, JVM hash set) — the
+    explode-and-regroup form shuffles |cand|·|set| rows where this
+    shuffles |cand| rows carrying bounded arrays. Same shape at
+    100 TB: two equi-joins keyed on doc_id, nothing pairwise beyond
+    the surviving candidates. Callers pass the pinned compact array
+    relation as ``arrs`` — no second shingling pass, no collect_list
+    re-group, and the two verify-join sides replay pinned blocks
+    instead of each re-running scan→HOF→explode→ObjectHashAggregate
+    (the r12 plan's duplicated subtree)."""
+    return (
+        cand.join(
+            arrs.select(F.col("doc_id").alias("a_id"), F.col("arr").alias("a_arr")),
+            "a_id",
+        )
+        .join(
+            arrs.select(F.col("doc_id").alias("b_id"), F.col("arr").alias("b_arr")),
+            "b_id",
+        )
+        .select(
+            "a_id",
+            "b_id",
+            F.size("a_arr").alias("size_a"),
+            F.size("b_arr").alias("size_b"),
+            F.size(F.array_intersect("a_arr", "b_arr")).alias("inter_size"),
+        )
+    )
+
+
 def similarity_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verification uses the whole-corpus dictionary, r13 shape: the
     compact per-doc shingle-array relation is pinned once and feeds
@@ -103,63 +197,8 @@ def similarity_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         storage_level=StorageLevel.MEMORY_AND_DISK,
     )
     sh = arrs.select("doc_id", F.explode("arr").alias("sh"))
-    # df and sz as window counts over the SAME relation — two
-    # exchanges total (one per partition key) instead of two
-    # groupBy-aggregate shuffles plus their joins back
-    w_doc = Window.partitionBy("doc_id")
-    ranked = (
-        sh.withColumn("df", F.count("*").over(Window.partitionBy("sh")))
-        .withColumn("sz", F.count("*").over(w_doc))
-        .withColumn(
-            "pos",
-            F.row_number().over(w_doc.orderBy(F.asc("df"), F.asc("sh"))),
-        )
-    )
-    # prefix length = sz - ceil(θ·sz) + 1, in exact integers
-    ceil_theta = F.floor(
-        (F.col("sz") * THETA_NUM + (THETA_DEN - 1)) / THETA_DEN
-    )
-    prefix = ranked.filter(
-        F.col("pos") <= F.col("sz") - ceil_theta + 1
-    ).transform(pin)
-    a = prefix.select(
-        F.col("doc_id").alias("a_id"),
-        "sh",
-        F.col("sz").alias("a_sz"),
-        F.col("pos").alias("a_pos"),
-    )
-    b = prefix.select(
-        F.col("doc_id").alias("b_id"),
-        "sh",
-        F.col("sz").alias("b_sz"),
-        F.col("pos").alias("b_pos"),
-    )
-    # overlap needed for J ≥ θ:  (NUM+DEN)·|∩| ≥ NUM·(|a|+|b|)
-    # positional upper bound per prefix match (PPJoin positional
-    # filter): elements of ∩ can only come from THIS match plus what
-    # remains after positions (a_pos, b_pos) in the shared rarity
-    # order, so |∩| ≤ 1 + min(a_sz − a_pos, b_sz − b_pos). A true pair
-    # satisfies the bound at every witness, so filtering each match
-    # row keeps completeness while cutting candidates ~100× at θ=0.5
-    # (the bare prefix filter keeps half of every set).
-    ub = 1 + F.least(
-        F.col("a_sz") - F.col("a_pos"), F.col("b_sz") - F.col("b_pos")
-    )
-    cand = (
-        a.join(b, "sh")
-        .filter(F.col("a_id") < F.col("b_id"))
-        # size filter: θ·max(|a|,|b|) ≤ min(|a|,|b|), integer form
-        .filter(
-            THETA_DEN * F.least("a_sz", "b_sz")
-            >= THETA_NUM * F.greatest("a_sz", "b_sz")
-        )
-        .filter(
-            (THETA_NUM + THETA_DEN) * ub
-            >= THETA_NUM * (F.col("a_sz") + F.col("b_sz"))
-        )
-        .select("a_id", "b_id")
-        .distinct()
-    )
+    prefix = rarity_prefix(sh, "sh", THETA_NUM, THETA_DEN).transform(pin)
+    cand = prefix_pairs(prefix, "sh", "a_id", "b_id", THETA_NUM, THETA_DEN)
     # r13 (guide §2.5 flavor of the one-partition hazard): the
     # candidate relation is ~125k rows at sf0.1 but only ~2 MB, so AQE
     # coalesces the post-distinct exchange to ONE partition — and with
@@ -171,34 +210,7 @@ def similarity_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expensive projection. Scale-adaptive: defaultParallelism, not a
     # constant; hash on a_id so the layout is deterministic.
     cand = cand.repartition(spark.sparkContext.defaultParallelism, "a_id")
-    # verification without the pair×shingle blow-up: candidates join
-    # each side's COMPACT shingle array by doc key, and the exact
-    # intersection runs in-row (array_intersect, JVM hash set) — the
-    # explode-and-regroup form shuffles |cand|·|set| rows where this
-    # shuffles |cand| rows carrying bounded arrays. Same shape at
-    # 100 TB: two equi-joins keyed on doc_id, nothing pairwise beyond
-    # the surviving candidates. The dictionary IS the pinned compact
-    # array relation — no second shingling pass, no collect_list
-    # re-group, and the two verify-join sides replay pinned blocks
-    # instead of each re-running scan→HOF→explode→ObjectHashAggregate
-    # (the r12 plan's duplicated subtree).
-    inter = (
-        cand.join(
-            arrs.select(F.col("doc_id").alias("a_id"), F.col("arr").alias("a_arr")),
-            "a_id",
-        )
-        .join(
-            arrs.select(F.col("doc_id").alias("b_id"), F.col("arr").alias("b_arr")),
-            "b_id",
-        )
-        .select(
-            "a_id",
-            "b_id",
-            F.size("a_arr").alias("size_a"),
-            F.size("b_arr").alias("size_b"),
-            F.size(F.array_intersect("a_arr", "b_arr")).alias("inter_size"),
-        )
-    )
+    inter = intersect_sizes(cand, arrs)
     union = F.col("size_a") + F.col("size_b") - F.col("inter_size")
     return (
         inter.withColumn("union_size", union)
@@ -335,21 +347,11 @@ def similarity_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         storage_level=StorageLevel.MEMORY_AND_DISK,
     )
     sh = arrs_full.select("doc_id", F.explode("arr").alias("sh"))
-    w_doc = Window.partitionBy("doc_id")
-    ranked = (
-        sh.withColumn("df", F.count("*").over(Window.partitionBy("sh")))
-        .withColumn("sz", F.count("*").over(w_doc))
-        .withColumn(
-            "pos",
-            F.row_number().over(w_doc.orderBy(F.asc("df"), F.asc("sh"))),
-        )
-    )
-    ceil_t = F.floor((F.col("sz") * CONT_NUM + (CONT_DEN - 1)) / CONT_DEN)
     # pinned: the two-window rarity chain is the second-most expensive
     # subtree here and a_pref is re-read every execution (r13 A/B in
     # the docstring — 3.46 -> 1.13 s steady)
     a_pref = pin(
-        ranked.filter(F.col("pos") <= F.col("sz") - ceil_t + 1).select(
+        rarity_prefix(sh, "sh", CONT_NUM, CONT_DEN).select(
             F.col("doc_id").alias("a_id"),
             "sh",
             F.col("sz").alias("a_sz"),
@@ -377,24 +379,7 @@ def similarity_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the verify dictionary IS the pinned compact array relation — no
     # second shingling pass, no collect_list re-group (r13; A/B in
     # the docstring)
-    arrs = arrs_full
-    inter = (
-        cand.join(
-            arrs.select(F.col("doc_id").alias("a_id"), F.col("arr").alias("a_arr")),
-            "a_id",
-        )
-        .join(
-            arrs.select(F.col("doc_id").alias("b_id"), F.col("arr").alias("b_arr")),
-            "b_id",
-        )
-        .select(
-            "a_id",
-            "b_id",
-            F.size("a_arr").alias("size_a"),
-            F.size("b_arr").alias("size_b"),
-            F.size(F.array_intersect("a_arr", "b_arr")).alias("inter_size"),
-        )
-    )
+    inter = intersect_sizes(cand, arrs_full)
     return inter.filter(
         CONT_DEN * F.col("inter_size") >= CONT_NUM * F.col("size_a")
     ).withColumn(

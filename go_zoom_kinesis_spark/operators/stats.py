@@ -521,18 +521,51 @@ def _kmv_hash(key) -> F.Column:
     ).cast("bigint")
 
 
+def _kmv_type_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, h): the distinct user hashes per event type — one
+    dedup shuffle, ∝ distinct keys."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.select("event_type", _kmv_hash(F.col("user_id")).alias("h")).distinct()
+
+
+def _kmv_topk(rel: DataFrame, keys: list[str]) -> DataFrame:
+    """Per-`keys`-group K smallest hashes of a (keys..., h) relation —
+    the KMV sketch rows — via the two-phase VALUE-BUCKET discipline
+    (the round-5 pattern): per-(group, high-16-bits) bucket counts, a
+    cumulative window over that ≤65536-row bounded relation picks the
+    cutoff bucket where the running count reaches K, and the per-group
+    rank runs only over rows at-or-below the cutoff (≈ K + one
+    bucket's width) — never a full per-group sort."""
+    from pyspark.sql.window import Window
+
+    rel = rel.withColumn("bucket", F.expr(f"h div {KMV_BUCKET_DIV}"))
+    bc = rel.groupBy(*keys, "bucket").agg(F.count("*").alias("c"))
+    w_cum = Window.partitionBy(*keys).orderBy("bucket")
+    cutoff = (
+        bc.withColumn("cum", F.sum("c").over(w_cum))
+        .filter(F.col("cum") >= KMV_K)
+        .groupBy(*keys)
+        .agg(F.min("bucket").alias("cut"))
+    )
+    kept = rel.join(F.broadcast(cutoff), keys, "left").filter(
+        F.col("cut").isNull() | (F.col("bucket") <= F.col("cut"))
+    )
+    w_rk = Window.partitionBy(*keys).orderBy("h")
+    return (
+        kept.withColumn("rk", F.row_number().over(w_rk))
+        .filter(F.col("rk") <= KMV_K)
+        .select(*keys, "h")
+    )
+
+
 def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type distinct-user cardinality via a KMV sketch,
     self-audited against the exact distinct count.
 
     Scale shape: ONE dedup shuffle of (event_type, h) pairs (∝ distinct
     keys — the cost any exact distinct pays once), then the K smallest
-    hashes per type are found with the two-phase VALUE-BUCKET
-    discipline (the round-5 pattern): per-(type, high-16-bits) bucket
-    counts, a cumulative window over that ≤65536-row bounded relation
-    picks the cutoff bucket where the running count reaches K, and the
-    per-type rank runs only over rows at-or-below the cutoff (≈ K +
-    one bucket's width) — never a full per-group sort. At 100 TB the
+    hashes per type come from ``_kmv_topk``'s two-phase
+    value-bucket top-K — never a full per-group sort. At 100 TB the
     sketch rows (K per group) are what a daily job persists; sketches
     MERGE by keeping the K smallest of a union, which is exactly how
     ``kmv_sketch_overlap`` composes them. The exact_distinct column is
@@ -542,30 +575,9 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Estimator: with k_used = K and m = K-th minimum over the 2^{56}
     space, est = (K-1)·2^{56} div m (integer floor); with fewer than K
     distinct hashes the sketch IS the exact set, so est = exact."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    dh = (
-        ev.select("event_type", _kmv_hash(F.col("user_id")).alias("h"))
-        .distinct()
-        .withColumn("bucket", F.expr(f"h div {KMV_BUCKET_DIV}"))
-        .transform(pin)
-    )
-    bc = dh.groupBy("event_type", "bucket").agg(F.count("*").alias("c"))
-    w_cum = Window.partitionBy("event_type").orderBy("bucket")
-    cutoff = (
-        bc.withColumn("cum", F.sum("c").over(w_cum))
-        .filter(F.col("cum") >= KMV_K)
-        .groupBy("event_type")
-        .agg(F.min("bucket").alias("cut"))
-    )
-    kept = dh.join(F.broadcast(cutoff), "event_type", "left").filter(
-        F.col("cut").isNull() | (F.col("bucket") <= F.col("cut"))
-    )
-    w_rk = Window.partitionBy("event_type").orderBy("h")
+    dh = _kmv_type_hashes(spark, sf_dir).transform(pin)
     sk = (
-        kept.withColumn("rk", F.row_number().over(w_rk))
-        .filter(F.col("rk") <= KMV_K)
+        _kmv_topk(dh, ["event_type"])
         .groupBy("event_type")
         .agg(F.count("*").alias("k_used"), F.max("h").alias("kth_min_hash"))
     )
@@ -620,38 +632,15 @@ def kmv_sketch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     precisely the cost the sketch exists to avoid; production keeps
     the sketch side only).
 
-    Scale shape: the sketches come from the same two-phase value-bucket
-    top-K as ``kmv_distinct_sketch`` (one dedup shuffle, bounded
-    windows); everything pairwise happens on K-row relations
+    Scale shape: the sketches come from ``_kmv_topk``, the two-phase
+    value-bucket top-K ``kmv_distinct_sketch`` uses (one dedup
+    shuffle, bounded windows); everything pairwise happens on K-row relations
     (T·K rows total; T = event types), so the pair stage is
     O(T²·K) — driver-free and independent of corpus size."""
     from pyspark.sql.window import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    dh = (
-        ev.select("event_type", _kmv_hash(F.col("user_id")).alias("h"))
-        .distinct()
-        .withColumn("bucket", F.expr(f"h div {KMV_BUCKET_DIV}"))
-        .transform(pin)
-    )
-    bc = dh.groupBy("event_type", "bucket").agg(F.count("*").alias("c"))
-    w_cum = Window.partitionBy("event_type").orderBy("bucket")
-    cutoff = (
-        bc.withColumn("cum", F.sum("c").over(w_cum))
-        .filter(F.col("cum") >= KMV_K)
-        .groupBy("event_type")
-        .agg(F.min("bucket").alias("cut"))
-    )
-    kept = dh.join(F.broadcast(cutoff), "event_type", "left").filter(
-        F.col("cut").isNull() | (F.col("bucket") <= F.col("cut"))
-    )
-    w_rk = Window.partitionBy("event_type").orderBy("h")
-    sk = (
-        kept.withColumn("rk", F.row_number().over(w_rk))
-        .filter(F.col("rk") <= KMV_K)
-        .select("event_type", "h")
-        .cache()
-    )
+    dh = _kmv_type_hashes(spark, sf_dir).transform(pin)
+    sk = _kmv_topk(dh, ["event_type"]).cache()
     # union of the two sketches per ordered pair, flagged by membership
     pairs = (
         sk.select(F.col("event_type").alias("type_a"))
@@ -833,33 +822,6 @@ ORACLE["kmv_sketch_overlap"] = f"""
     JOIN sizes sa ON sa.event_type = e.type_a
     JOIN sizes sb ON sb.event_type = e.type_b
 """
-
-
-def _kmv_topk(rel, keys: list[str]):
-    """Per-`keys`-group K smallest hashes of a (keys..., h) relation,
-    via the same two-phase value-bucket discipline as
-    ``kmv_distinct_sketch`` (bucket counts → cumulative cutoff per
-    group → rank only the at-or-below-cutoff rows)."""
-    from pyspark.sql.window import Window
-
-    rel = rel.withColumn("bucket", F.expr(f"h div {KMV_BUCKET_DIV}"))
-    bc = rel.groupBy(*keys, "bucket").agg(F.count("*").alias("c"))
-    w_cum = Window.partitionBy(*keys).orderBy("bucket")
-    cutoff = (
-        bc.withColumn("cum", F.sum("c").over(w_cum))
-        .filter(F.col("cum") >= KMV_K)
-        .groupBy(*keys)
-        .agg(F.min("bucket").alias("cut"))
-    )
-    kept = rel.join(F.broadcast(cutoff), keys, "left").filter(
-        F.col("cut").isNull() | (F.col("bucket") <= F.col("cut"))
-    )
-    w_rk = Window.partitionBy(*keys).orderBy("h")
-    return (
-        kept.withColumn("rk", F.row_number().over(w_rk))
-        .filter(F.col("rk") <= KMV_K)
-        .select(*keys, "h")
-    )
 
 
 def _kmv_day_prefilter(it):

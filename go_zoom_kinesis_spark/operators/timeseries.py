@@ -129,6 +129,35 @@ def ts_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hour_grid(ev: DataFrame) -> DataFrame:
+    """(event_type, bucket_hour): every hour of the global
+    [min, max] ``ts`` range for every event type — the dense grid of a
+    gap-fill, one ``sequence`` explode over the broadcast global
+    bounds, O(hours × types) regardless of fact rows."""
+    bounds = ev.agg(
+        F.date_trunc("hour", F.min("ts")).alias("lo"),
+        F.date_trunc("hour", F.max("ts")).alias("hi"),
+    )
+    types = ev.select("event_type").distinct()
+    return types.join(F.broadcast(bounds)).select(
+        "event_type",
+        F.explode(
+            F.sequence("lo", "hi", F.expr("interval 1 hour"))
+        ).alias("bucket_hour"),
+    )
+
+
+def _user_history(ev: DataFrame) -> DataFrame:
+    """(user_id, hist): each user's events as (ts, event_id, value)
+    structs, sorted — one groupBy(user) shuffle, the pinned fold order
+    of the per-user sequential recurrences."""
+    return ev.groupBy("user_id").agg(
+        F.array_sort(
+            F.collect_list(F.struct("ts", "event_id", "value"))
+        ).alias("hist")
+    )
+
+
 def ts_gapfill_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly series per event type over the full [min, max] range with
     zero-filled counts and last-observation-carried-forward sums: the
@@ -143,18 +172,7 @@ def ts_gapfill_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
         # carried value is already canonicalizer-safe
         F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),
     )
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi"),
-    )
-    types = ev.select("event_type").distinct()
-    grid = types.join(F.broadcast(bounds)).select(
-        "event_type",
-        F.explode(
-            F.sequence("lo", "hi", F.expr("interval 1 hour"))
-        ).alias("bucket_hour"),
-    )
-    dense = grid.join(per_hour, ["event_type", "bucket_hour"], "left")
+    dense = _hour_grid(ev).join(per_hour, ["event_type", "bucket_hour"], "left")
     w = (
         Window.partitionBy("event_type")
         .orderBy("bucket_hour")
@@ -176,11 +194,7 @@ def ts_ewma_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     result is bit-identical across engines. Alpha of exactly one half
     keeps every step a single IEEE add + halving."""
     ev = _events(spark, sf_dir)
-    seq = ev.groupBy("user_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("ts", "event_id", "value"))
-        ).alias("hist")
-    )
+    seq = _user_history(ev)
     vals = F.transform(F.col("hist"), lambda s: s["value"])
     ewma = F.aggregate(
         F.slice(vals, 2, F.greatest(F.size(vals) - 1, F.lit(0))),
@@ -1142,18 +1156,7 @@ def ts_linear_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
     )
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi"),
-    )
-    types = ev.select("event_type").distinct()
-    grid = types.join(F.broadcast(bounds)).select(
-        "event_type",
-        F.explode(
-            F.sequence("lo", "hi", F.expr("interval 1 hour"))
-        ).alias("bucket_hour"),
-    )
-    dense = grid.join(per_hour, ["event_type", "bucket_hour"], "left")
+    dense = _hour_grid(ev).join(per_hour, ["event_type", "bucket_hour"], "left")
     eh = (F.unix_timestamp("bucket_hour") / 3600).cast("long")
     dense = dense.withColumn("eh", eh)
     wf = (
@@ -1455,11 +1458,7 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Unbounded streams run the same recurrence incrementally
     in the stateful processor."""
     ev = _events(spark, sf_dir)
-    seq = ev.groupBy("user_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("ts", "event_id", "value"))
-        ).alias("hist")
-    )
+    seq = _user_history(ev)
     vals = F.transform(F.col("hist"), lambda s: s["value"])
     x1, x2 = F.element_at(vals, 1), F.element_at(vals, 2)
     init = F.array(x2, x2 - x1)

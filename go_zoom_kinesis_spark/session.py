@@ -20,6 +20,24 @@ def local_cpus() -> int:
     return int(env) if env else len(os.sched_getaffinity(0))
 
 
+# runtime confs every engine session carries, whoever built it
+_ENGINE_CONFS = {
+    # UTC pins timestamp semantics for oracle-comparable results
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # events.parquet carries TIMESTAMP(NANOS); read as long, the
+    # loader converts to micros (matches DuckDB's ns→µs truncation)
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # naive-micros parquet timestamps read as TIMESTAMP (UTC session
+    # tz), not TIMESTAMP_NTZ — keeps epoch casts legal and matches
+    # DuckDB's naive-timestamp epoch() semantics
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+}
+
+
 def get_spark(
     app_name: str = "go-zoom-kinesis-spark",
     shuffle_partitions: int | None = None,
@@ -37,23 +55,11 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # events.parquet carries TIMESTAMP(NANOS); read as long, the
-        # loader converts to micros (matches DuckDB's ns→µs truncation)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # naive-micros parquet timestamps read as TIMESTAMP (UTC session
-        # tz), not TIMESTAMP_NTZ — keeps epoch casts legal and matches
-        # DuckDB's naive-timestamp epoch() semantics
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_ENGINE_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -67,12 +73,7 @@ def configure_session(spark: SparkSession) -> SparkSession:
     may be set here (UTC matters for oracle-comparable timestamps).
     """
     for k, v in {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        **_ENGINE_CONFS,
         # right-size shuffles for the local test scale (runtime-settable;
         # a cluster deployment would size this to cores × 2-3)
         "spark.sql.shuffle.partitions": str(local_cpus()),
@@ -83,7 +84,6 @@ def configure_session(spark: SparkSession) -> SparkSession:
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "10GB",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "10MB",
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     }.items():
         try:
             spark.conf.set(k, v)

@@ -14,7 +14,8 @@ Protocol:
    into ``<path>/`` (same-filesystem rename) and ONE manifest line
    ``{batch_id, files, n_rows}`` records the batch, ``n_rows`` read
    from the parts' parquet footers. Files not in the manifest are not
-   data. ``abort()`` deletes the temps.
+   data, and the next commit deletes them. ``abort()`` deletes the
+   temps; ``commit_batch`` removes its stage dir whatever happens.
 3. A ``batch_id`` already in the manifest is a NO-OP: ``commit_batch``
    returns before any write, and the streaming writer drops its
    replayed temps. That makes micro-batch replay after a checkpoint
@@ -109,23 +110,25 @@ def _append_manifest(path: str, entry: dict) -> None:
 
 def _commit_files(path: str, messages, batch_id, overwrite: bool = False) -> None:
     """Driver-side: publish the staged parts + append ONE manifest line.
-    Idempotent per batch_id — a replayed commit is a no-op. With
-    ``overwrite`` (batch writer ``mode('overwrite')``) the existing
-    manifest and data files are cleared first, so the committed state
-    is exactly this job's output."""
+    Idempotent per batch_id — a replayed commit is a no-op. Data files
+    no manifest line lists are deleted first: only this commit
+    publishes, so they are parts a crashed commit published without
+    its manifest line. With ``overwrite`` (batch writer
+    ``mode('overwrite')``) the manifest is dropped first, so every
+    data file goes and the committed state is exactly this job's
+    output."""
     if batch_id is not None and batch_id in _manifest_batches(path):
         _abort_files(path, messages)  # replay: drop the re-written temps
         return
-    if overwrite:
-        # truncate-then-publish: drop the manifest first (readers see
-        # "no committed data", never a mix of old manifest + missing
-        # files), then the now-unreferenced data files
-        mf = os.path.join(path, MANIFEST)
-        if os.path.exists(mf):
-            os.remove(mf)
-        for fname in os.listdir(path):
-            if fname.endswith(".parquet"):
-                os.remove(os.path.join(path, fname))
+    mf = os.path.join(path, MANIFEST)
+    if overwrite and os.path.exists(mf):
+        # truncate-then-publish: readers see "no committed data", never
+        # a mix of old manifest + missing files
+        os.remove(mf)
+    listed = {f for e in _manifest_entries(path) for f in e["files"]}
+    for fname in os.listdir(path):
+        if fname.endswith(".parquet") and fname not in listed:
+            os.remove(os.path.join(path, fname))
     # part names are unique: uuid-named task files, or Spark parts that
     # embed their job's uuid
     staged = sorted(m.fname for m in messages if m is not None and m.fname)
@@ -191,10 +194,12 @@ def commit_batch(df, path: str, batch_id: int) -> None:
         return
     stage = uuid.uuid4().hex
     stage_dir = os.path.join(path, "tmp", stage)
-    df.write.parquet(stage_dir)
-    parts = [f for f in sorted(os.listdir(stage_dir)) if f.endswith(".parquet")]
-    _commit_files(path, [GzkCommitMessage(os.path.join(stage, f)) for f in parts], batch_id)
-    shutil.rmtree(stage_dir)
+    try:
+        df.write.parquet(stage_dir)
+        parts = [f for f in sorted(os.listdir(stage_dir)) if f.endswith(".parquet")]
+        _commit_files(path, [GzkCommitMessage(os.path.join(stage, f)) for f in parts], batch_id)
+    finally:
+        shutil.rmtree(stage_dir, ignore_errors=True)
 
 
 def read_committed(path: str) -> list[dict]:

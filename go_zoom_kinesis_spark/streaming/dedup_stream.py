@@ -15,7 +15,7 @@ a post-hoc batch pass.
   an unbounded 100 TB/day stream. Cross-micro-batch duplicates within
   the horizon are dropped exactly like a batch ``groupBy(sha)``.
 - ``scrub_text`` is the stateless PII projection shared verbatim
-  between batch and streaming plans (same Column expression tree), so
+  between batch and streaming plans (one function builds both trees), so
   the batch-vs-stream equivalence test is exact.
 """
 
@@ -80,39 +80,22 @@ def streaming_exact_dedup(
 # half is ``operators/dedup.py``: the STREAM flags arrivals that share a
 # MinHash band bucket with an earlier arrival (cheap, state = one row
 # per live bucket), and the batch verify (``dedup_incremental_lsh``)
-# runs exact Jaccard on the flagged slice later. Signatures are the
-# SAME 16-hash / 4-band construction the batch operators key on, built
-# from the same Column expressions — so a doc flagged here lands in
+# runs exact Jaccard on the flagged slice later. Signatures come from
+# the SAME function the batch operators band with
+# (``functions.hashes.minhash_bands``) — so a doc flagged here lands in
 # exactly the bucket the batch join would probe.
 
 
 def minhash_band_stream(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Stream-safe banded-signature projection: (all input columns) +
-    (band_idx, band_key). Pure per-row codegen — usable identically on
-    batch and streaming DataFrames (no repartition, no state)."""
+    (band_idx, band_key). ``H.minhash_bands`` over
+    ``H.shingle_hashes_col`` — the function the batch operators band
+    with, so it is usable identically on batch and streaming
+    DataFrames (no repartition, no state)."""
     from ..functions import hashes as H
 
-    toks = H.tokens_col(F.col(text_col))
-    hs = F.array_distinct(F.transform(H.shingles_col(toks), H.char_hash_col))
-    with_sig = docs.withColumn("_hs", hs).filter(F.size("_hs") > 0)
-
-    def _affine(i: int):
-        return lambda h: H.affine_col(h, i)
-
-    for i in range(H.NUM_HASHES):
-        with_sig = with_sig.withColumn(
-            f"mh{i}", F.array_min(F.transform("_hs", _affine(i)))
-        )
-    band_exprs = []
-    for b in range(H.NUM_BANDS):
-        cols = ",".join(
-            f"mh{b * H.ROWS_PER_BAND + r}" for r in range(H.ROWS_PER_BAND)
-        )
-        band_exprs.append(f"{b}, concat_ws('-', {cols})")
-    return with_sig.selectExpr(
-        "* except(_hs, " + ",".join(f"mh{i}" for i in range(H.NUM_HASHES)) + ")",
-        f"stack({H.NUM_BANDS}, {', '.join(band_exprs)}) as (band_idx, band_key)",
-    )
+    hs = docs.withColumn("_hs", H.shingle_hashes_col(F.col(text_col)))
+    return H.minhash_bands(hs, "_hs")
 
 
 LSH_SCREEN_OUTPUT = None  # built lazily: pyspark.sql.types import cost

@@ -189,7 +189,8 @@ def test_read_back_same_for_both_staging_paths(spark, tmp_path):
 def test_manifest_crash_after_publish_replays_exactly_once(spark, tmp_path, monkeypatch):
     """A driver crash after the publish, before the manifest append:
     none of the batch is visible, the replay commits it once, and the
-    orphaned parts are never read."""
+    orphaned parts are never read; the replay deletes them, and no
+    stage dir outlives its commit."""
     path, df = str(tmp_path / "sink_crash"), _typed_frame(spark)
     append, entries = gzk_sink._append_manifest, []
 
@@ -209,3 +210,5 @@ def test_manifest_crash_after_publish_replays_exactly_once(spark, tmp_path, monk
     assert [e["batch_id"] for e in gzk_sink._manifest_entries(path)] == [0]
     assert orphans and not orphans & set(entries[1]["files"])
     assert _sorted(read_committed(path)) == _sorted(r.asDict() for r in df.collect())
+    assert not orphans & set(os.listdir(path))
+    assert os.listdir(os.path.join(path, "tmp")) == []

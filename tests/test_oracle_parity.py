@@ -29,9 +29,12 @@ def test_oracle_keys_subset_of_queries(name):
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_runs(spark, sf_dir, name):
-    df = QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0
+def test_query_runs(name):
+    """Every registered query has an oracle, so
+    ``test_query_matches_oracle`` builds and runs each one; with
+    ``test_oracle_keys_subset_of_queries`` this pins
+    ``set(QUERIES) == set(ORACLE)``."""
+    assert name in ORACLE
 
 
 @pytest.mark.parametrize("name", sorted(ORACLE))
