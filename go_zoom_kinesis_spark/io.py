@@ -102,22 +102,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     return _normalize_ns_timestamps(spark.read.parquet(table_path(sf_dir, name)))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every test table; missing files are skipped (some sf dirs may
-    lack the LLM-pipeline tables)."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = table_path(sf_dir, name)
-        if os.path.exists(path):
-            out[name] = _normalize_ns_timestamps(spark.read.parquet(path))
-    return out
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load tables and register each as a temp view (for the SQL API)."""
-    tables = load_tables(spark, sf_dir)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables

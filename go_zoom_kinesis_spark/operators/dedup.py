@@ -91,10 +91,8 @@ def _pair_jaccard(cand: DataFrame, arrs: DataFrame) -> DataFrame:
     10.5 s warm at sf10 on the pre-prune 11.2M-pair formulation."""
     # materialize: cand (the expensive candidate-generation join)
     # feeds the two semi-join branches AND the verify join — left lazy
-    # the whole upstream recomputes three times. localCheckpoint, not
-    # cache (r11 hygiene): blocks are freed with the query's handles
-    # by the ContextCleaner instead of sitting in the CacheManager
-    # registry until an explicit unpersist
+    # the whole upstream recomputes three times
+    # A/B (dedup_minhash_lsh) sf0.1 0.07→0.47 / 3.7→4.7 s, sf1 0.16→3.13 / 32.6→37.4 s
     cand = cand.transform(pin)
     # no .distinct(): the left-semi join dedups by construction, and
     # skipping it saves a full shuffle of the pair list
@@ -104,6 +102,7 @@ def _pair_jaccard(cand: DataFrame, arrs: DataFrame) -> DataFrame:
     # materialize the reduced dictionary: ∝ docs-in-near-dup-pairs
     # (KB to MB at any corpus size), both pair sides consume it — left
     # lazy it would rescan + reshingle the corpus twice
+    # A/B (dedup_minhash_lsh) sf0.1 0.05→0.09 / 2.5→2.3 s, sf1 0.12→0.27 / 23.4→21.8 s
     dict_small = arrs.join(docs_in_play, "doc_id", "left_semi").transform(pin)
     a = dict_small.select(
         F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a")
@@ -146,6 +145,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (catches jaccard ≳ 0.5 with high probability), banded bucket join
     for candidates, exact jaccard verification ≥ 0.5."""
     docs = _docs(spark, sf_dir)
+    # A/B (dedup_minhash_lsh) sf0.1 0.05→0.05 / 3.1→15.0 s
     arrs = _shingle_arrays(docs).transform(pin)
     cand = _lsh_candidate_pairs(H.minhash_bands(arrs, "hs"))
     jac = _pair_jaccard(cand, arrs)
@@ -236,6 +236,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     at every measured scale. The oracle needs no mirror: pruned pairs
     fail the ≥ τ filter identically."""
     docs = _docs(spark, sf_dir)
+    # A/B sf0.1 0.09→0.08 / 8.1→26.3 s
     arrs = _shingle_arrays(docs).transform(pin)
     sh = arrs.select("doc_id", F.explode("hs").alias("shash"))
     # one shuffle builds the inverted index; the df-cap becomes a size()
@@ -348,9 +349,8 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum (one scalar action per round).
     """
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    # materialized once for the per-round joins; localCheckpoint, not
-    # cache (r11 hygiene): blocks die with this query's handles
-    # instead of sitting in the CacheManager registry
+    # pinned once for the per-round joins, so no round's plan carries
+    # the minhash pipeline
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
@@ -442,13 +442,13 @@ def minhash_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     products stay < 2^63 for any realistic uid (a < 2^25, uid < 2^38).
     """
     ev = load_table(spark, sf_dir, "events")
+    # A/B sf0.1 0.21→0.36 / 1.0→1.2 s, sf1 0.29→0.75 / 1.5→2.1 s
     user_sets = ev.groupBy("user_id").agg(
         F.sort_array(F.collect_set("event_type")).alias("types")
     ).transform(pin)
     # ^ referenced by sigs (×2 via self-join) and inter: materializes
     # the single user-scale shuffle once instead of three
-    # plan-identical recomputes (no ReuseExchange across these shapes);
-    # checkpoint not cache (r11) so the block's lifetime is the query
+    # plan-identical recomputes (no ReuseExchange across these shapes)
     du = user_sets.select(
         "user_id", F.explode("types").alias("event_type")
     )
@@ -540,8 +540,7 @@ def dedup_canonical_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # view would re-run the whole minhash pipeline once per iteration.
     # localCheckpoint(eager=True) pins it (O(near-dup docs) rows — KB
     # at any corpus size) AND cuts the lineage; on a real cluster a
-    # reliable checkpoint() does the same durably. (r11: was
-    # cache()+count — same materialization, unbounded lifetime.)
+    # reliable checkpoint() does the same durably.
     parent = parent.transform(pin)
     # WITH RECURSIVE is SQL-only, so the inputs go through temp views;
     # unique names keep concurrent invocations on a shared session from
@@ -1062,6 +1061,7 @@ def simhash_hamming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             bit = F.when(F.col(f"v{j}") > 0, F.lit(2**r)).otherwise(F.lit(0))
             expr = bit if expr is None else expr + bit
         band_cols.append(expr.cast("long").alias(f"b{k}"))
+    # A/B sf0.1 0.14→14.15 / 8.9→36.0 s
     sigs = votes.select("doc_id", *band_cols).transform(pin)
     a = sigs.select(
         F.col("doc_id").alias("doc_a"),
@@ -1181,6 +1181,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``_pair_jaccard``'s semi-join reduction). Same bands, same
     threshold, same flood caps as ``dedup_minhash_lsh``."""
     docs = _docs(spark, sf_dir)
+    # A/B sf0.1 0.07→0.07 / 2.7→11.4 s
     arrs = _shingle_arrays(docs).transform(pin)
     bands = H.minhash_bands(arrs, "hs")
     incoming = bands.filter(
@@ -1261,10 +1262,11 @@ def _exact_pairs_ppjoin(arrs: DataFrame) -> DataFrame:
     (same filter expression as ``dedup_minhash_lsh``'s verify, so
     truth and LSH agree on the boundary bit-for-bit)."""
     sh = arrs.select("doc_id", F.explode("hs").alias("shash"))
-    # materialize: both candidate-join sides read the prefix relation
-    # — the same discipline simjoin.similarity_prefix_join applies
-    # (checkpoint not cache, r11: block lifetime = query lifetime)
-    prefix = rarity_prefix(sh, "shash", _RA_TN, _RA_TD).transform(pin)
+    # both candidate-join sides read the prefix relation, but only
+    # inside the job of _pair_jaccard's candidate pin, so a pin of its
+    # own paid nothing (build+cold+steady 2.6 → 2.8 s ± 0.5 at sf0.1,
+    # 17.6 → 17.2 s ± 2.4 at sf1 without it)
+    prefix = rarity_prefix(sh, "shash", _RA_TN, _RA_TD)
     cand = prefix_pairs(prefix, "shash", "doc_a", "doc_b", _RA_TN, _RA_TD)
     return (
         _pair_jaccard(cand, arrs)
@@ -1345,6 +1347,7 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).filter(
         F.col("doc_id") % RECALL_AUDIT_MOD == RECALL_AUDIT_SLOT
     )
+    # A/B sf0.1 0.29→4.22 / 2.4→18.8 s
     arrs = _shingle_arrays(docs).transform(pin)
     truth = _exact_pairs_ppjoin(arrs).withColumn("t", F.lit(1))
     cand = _lsh_candidate_pairs(H.minhash_bands(arrs, "hs")).withColumn(
@@ -1524,10 +1527,12 @@ def dedup_two_tier_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     that architecture with the tiers glued, so one driver hash covers
     the composition."""
     docs = _docs(spark, sf_dir)
+    # A/B sf0.1 0.45→0.37 / 5.6→16.2 s
     arrs = _shingle_arrays(docs).transform(pin)
     # materialize: bands feeds the bucket-min aggregate, the per-doc
     # flag join, and both candidate sides — left lazy it would
-    # re-minhash the corpus four times (checkpoint not cache, r11)
+    # re-minhash the corpus four times
+    # A/B sf0.1 0.33→0.76 / 5.1→8.5 s, sf1 0.69→3.52 / 23.6→37.8 s
     bands = H.minhash_bands(arrs, "hs").transform(pin)
     bmin = bands.groupBy("band_idx", "band_key").agg(
         F.min("doc_id").alias("first_doc")

@@ -90,6 +90,7 @@ def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     # io.fan_out_narrow: a real multi-split scan means real scale.
     files = raw.inputFiles()
     big = bool(files) and len(files) >= spark.sparkContext.defaultParallelism
+    # A/B sf0.1 0.54→1.70 / 2.5→5.4 s, sf1 5.08→2.35 / 12.8→5.6 s
     li = pin(
         fan_out_narrow(raw),
         storage_level=StorageLevel.MEMORY_AND_DISK if big else None,

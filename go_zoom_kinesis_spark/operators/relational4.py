@@ -287,6 +287,7 @@ def cross_lingual_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per self-join side and once for the totals
     # (plans/r13/cross_lingual_contamination_before.txt). One pass +
     # replay is strictly less work at every scale.
+    # A/B sf0.1 0.22→1.07 / 1.3→3.2 s, sf1 1.03→7.43 / 6.4→17.2 s
     sh = pin(
         pre.select("lang", F.explode(shingle_hs).alias("shash")).distinct()
     )
@@ -502,12 +503,13 @@ def collocation_pmi_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     uni = toks.select(F.explode("toks").alias("token"))
     cb = bg.groupBy("bigram").agg(F.count("*").alias("c_bg"))
-    # referenced twice (w1 and w2 joins); cached so the corpus is
-    # tokenized once, not twice — the relation is vocab-bounded
-    cu = uni.groupBy("token").agg(F.count("*").alias("c")).cache()
+    # referenced twice (w1 and w2 joins) inside one plan; a pin here
+    # paid nothing (steady 0.49 → 0.46 s at sf0.1, 1.89 → 2.37 s ± 0.74
+    # at sf1 without it)
+    cu = uni.groupBy("token").agg(F.count("*").alias("c"))
     # corpus totals come from array SIZES in one scan — no explode, no
-    # shuffle, and no recompute of the count relations (Spark reuses
-    # no un-cached subplan, so folding cb/cu here would re-scan)
+    # shuffle, and no recompute of the count relations (folding cb/cu
+    # here would re-scan the token stream)
     tot = toks.agg(
         F.sum(F.greatest(F.size("toks") - 1, F.lit(0))).alias("n_bg"),
         F.sum(F.size("toks")).alias("n_uni"),

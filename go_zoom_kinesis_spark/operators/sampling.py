@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..persist import pin
 
 DEC = "decimal(25,6)"
 
@@ -649,9 +650,10 @@ def purged_timefold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.unboundedPreceding, Window.currentRow
     )
     w_all = Window.partitionBy()
-    # cache the bounded bucket relation: it feeds four plan branches
+    # pin the bounded bucket relation: it feeds four plan branches
     # (fold ranges, the embargo classification's bucket side, and the
-    # corpus total) — uncached, each branch would re-scan events
+    # corpus total) — unpinned, each branch would re-scan events
+    # A/B sf0.1 0.17→0.28 / 0.6→0.8 s, sf1 0.26→0.41 / 1.1→1.6 s
     hb2 = (
         hb.select(
             "hour",
@@ -664,7 +666,7 @@ def purged_timefold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
             F.expr(f"(cum - 1) * {TIMEFOLD_K} div total").alias("fold"),
         )
-        .cache()
+        .transform(pin)
     )
     fr = hb2.groupBy("fold").agg(
         F.min("hour").alias("h0"),

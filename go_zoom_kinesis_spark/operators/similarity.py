@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashes import A, B
 from ..io import fan_out_narrow, load_table
-from ..persist import pin
+from ..persist import pin, unpin
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
 TOP_K = 5
@@ -265,39 +265,20 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: assignment is a broadcast-centroids map-side pass (one
     O(n·K) scan, no shuffle), the probe join is equi on the bucket key
-    — candidates ∝ n·nprobe/K instead of n per query.
-
-    Persistence (r11): the shared 16×n centroid-scoring relation is
-    ``localCheckpoint(eager=True)``-materialized, not ``.cache()``d —
-    checkpoint blocks die with this query's handles (ContextCleaner),
-    while CacheManager entries outlive the query until an explicit
-    unpersist and accumulate across a 244-query sweep (ADVICE r10)."""
+    — candidates ∝ n·nprobe/K instead of n per query."""
     emb = _with_norm(_emb(spark, sf_dir))
     # one centroid-scoring pass serves both the inverted-list assignment
     # (rank 1 for every vector) and the query probe lists (rank ≤ nprobe
     # for query vectors)
+    # A/B (similarity_ivf_topk) sf0.1 0.20→0.46 / 1.1→1.4 s, sf1 0.53→1.53 / 2.7→3.8 s
     scored_cent = _centroid_ranks(emb).select("vec_id", "c_id", "c_rk").transform(pin)
-    assign = scored_cent.filter(F.col("c_rk") == 1).select(
-        "vec_id", F.col("c_id").alias("bucket")
-    )
     probes = (
         scored_cent.filter(
             (F.col("vec_id") < N_QUERIES) & (F.col("c_rk") <= IVF_NPROBE)
         )
         .select(F.col("vec_id").alias("q_id"), F.col("c_id").alias("probe"))
     )
-    q = emb.select(
-        F.col("vec_id").alias("qv_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    ).filter(F.col("qv_id") < N_QUERIES)
-    cand = (
-        probes.join(assign, F.col("bucket") == F.col("probe"))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .join(emb, "vec_id")
-        .join(F.broadcast(q), F.col("q_id") == F.col("qv_id"))
-    )
-    scored = cand.withColumn(
+    scored = _ivf_candidates(emb, scored_cent, probes).withColumn(
         "cos_sim_raw",
         _dot(F.col("q_emb"), F.col("emb")) / (F.col("q_norm") * F.col("norm")),
     )
@@ -306,6 +287,29 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= IVF_TOP_K)
         .select("q_id", "vec_id", F.round("cos_sim_raw", 6).alias("cos_sim"), "rk")
+    )
+
+
+def _ivf_candidates(
+    emb: DataFrame, scored_cent: DataFrame, probes: DataFrame
+) -> DataFrame:
+    """IVF candidate join: each query's probed lists (``probes``: q_id,
+    probe, ...) joined to the inverted lists (every vector's rank-1
+    centroid in ``scored_cent``), then to the candidate embeddings and
+    the broadcast query vectors. Self-matches are dropped."""
+    assign = scored_cent.filter(F.col("c_rk") == 1).select(
+        "vec_id", F.col("c_id").alias("bucket")
+    )
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("qv_id"),
+        F.col("emb").alias("q_emb"),
+        F.col("norm").alias("q_norm"),
+    )
+    return (
+        probes.join(assign, F.col("bucket") == F.col("probe"))
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .join(emb, "vec_id")
+        .join(F.broadcast(q), F.col("q_id") == F.col("qv_id"))
     )
 
 
@@ -659,11 +663,11 @@ def embedding_pca_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins regardless of corpus size. Intermediates ride decimal(38,0)
     (u·g·u partials reach ~10²³ at sf1; headroom to ~10³⁵)."""
     dec = "decimal(38,0)"
-    # i ≤ j triangle. Cache audit (r11): this relation is d(d+1)/2 ≤
-    # 2,080 rows REGARDLESS of corpus size (the corpus-scale work is
-    # the Gram pass that produces it), so the cached block is bounded —
-    # not the corpus-scale CacheManager hazard the ivf caches were
-    tri = embedding_gram_int8(spark, sf_dir).cache()
+    # i ≤ j triangle, pinned: both the triangle and its mirror read it,
+    # and it is d(d+1)/2 ≤ 2,080 rows REGARDLESS of corpus size (the
+    # corpus-scale work is the Gram pass that produces it)
+    # A/B sf0.1 0.14→0.48 / 0.8→1.9 s, sf1 0.12→1.28 / 1.6→3.2 s
+    tri = embedding_gram_int8(spark, sf_dir).transform(pin)
     mirror = tri.filter(F.col("i") != F.col("j")).select(
         F.col("j").alias("i"), F.col("i").alias("j"), F.col("g")
     )
@@ -1613,25 +1617,26 @@ def coreset_kcenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, so each round's min-distance is an IN-ROW chained least()
     over literal center arrays — no join, no window, no shuffle; the
     argmax is a TakeOrdered(1) over one scan. K rounds = K scans of a
-    cached projection with 1 collected row each (the same O(1)-per-
+    pinned projection with 1 collected row each (the same O(1)-per-
     round driver discipline as ``dedup_components`` / BPE training).
     Distances are the bit-exact sequential-fold dot products shared
     with the rest of the family, so the DuckDB oracle replays the
     greedy trajectory exactly — including ties, broken (distance DESC,
     vec_id ASC)."""
-    # construction-scoped cache: the K greedy scans below all collect
+    # construction-scoped pin: the K greedy scans below all collect
     # during THIS function call and the returned relation is literal
-    # driver rows, so the cache is fully consumed before return —
-    # unpersisted in the finally (ADVICE/VERDICT r10 cache audit)
+    # driver rows, so the pin is fully consumed before return —
+    # released in the finally
+    # A/B sf0.1 0.26→0.26 / 3.0→3.3 s, sf1 0.24→0.23 / 3.8→5.0 s
     emb = (
         _with_norm(_emb(spark, sf_dir))
         .select("vec_id", "emb", "norm")
-        .cache()
+        .transform(pin)
     )
     try:
         return _coreset_greedy(spark, emb)
     finally:
-        emb.unpersist()
+        unpin(emb)
 
 
 def _coreset_greedy(spark: SparkSession, emb: DataFrame) -> DataFrame:
@@ -1741,17 +1746,8 @@ def ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall monotone non-decreasing and cost strictly increasing in
     nprobe.
 
-    Persistence (r11, ADVICE/VERDICT r10): the three shared relations
-    (scored_cent — 16×n rows, cand, truth) ride
-    ``localCheckpoint(eager=True)`` instead of ``.cache()``. Cached
-    plans sit in the session CacheManager behind a STRONG reference
-    and outlive the query until an explicit unpersist/clearCache — in
-    a 244-query back-to-back sweep those corpus-sized blocks
-    accumulate until LRU thrashing. Checkpoint blocks are held only by
-    the DataFrame itself, so the ContextCleaner frees them as soon as
-    the query's handles are garbage-collected: lifetime is bounded by
-    the query, which is the contract. Timed work is identical (warm
-    cache reads ≈ checkpoint reads); the plan-shape referee audits the
+    Persistence: the three shared relations (scored_cent — 16×n rows,
+    cand, truth) are pinned; the plan-shape referee audits the
     fully-lazy twin via ``persist=False``."""
     return _ivf_probe_sweep_build(spark, sf_dir, persist=True)
 
@@ -1763,10 +1759,8 @@ def _ivf_probe_sweep_build(
         return df.transform(pin) if persist else df
 
     emb = _with_norm(_emb(spark, sf_dir))
+    # A/B sf0.1 0.17→0.16 / 1.8→1.6 s, sf1 0.36→0.47 / 5.1→4.8 s
     scored_cent = _centroid_ranks(emb).select("vec_id", "c_id", "c_rk").transform(hold)
-    assign = scored_cent.filter(F.col("c_rk") == 1).select(
-        "vec_id", F.col("c_id").alias("bucket")
-    )
     probes = scored_cent.filter(
         (F.col("vec_id") < N_QUERIES) & (F.col("c_rk") <= max(IVF_SWEEP))
     ).select(
@@ -1774,16 +1768,9 @@ def _ivf_probe_sweep_build(
         F.col("c_id").alias("probe"),
         F.col("c_rk").alias("probe_rank"),
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qv_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
+    # A/B sf0.1 0.13→0.47 / 1.6→2.2 s, sf1 0.33→1.41 / 4.6→6.2 s
     cand = (
-        probes.join(assign, F.col("bucket") == F.col("probe"))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .join(emb, "vec_id")
-        .join(F.broadcast(q), F.col("q_id") == F.col("qv_id"))
+        _ivf_candidates(emb, scored_cent, probes)
         .select(
             "q_id",
             "vec_id",
@@ -1795,7 +1782,7 @@ def _ivf_probe_sweep_build(
         )
         # two consumers (cost counts + the ranking) — materialize the
         # bounded candidate relation so the probe join runs once, not
-        # per branch (checkpoint, not cache: lifetime = this query)
+        # per branch
         .transform(hold)
     )
     swept = cand.withColumn(
@@ -1818,6 +1805,7 @@ def _ivf_probe_sweep_build(
         .filter(F.col("rk") <= IVF_TOP_K)
         .select("nprobe", "q_id", "vec_id")
     )
+    # A/B sf0.1 0.15→0.36 / 1.9→1.8 s, sf1 0.32→0.94 / 4.6→5.0 s
     truth = (
         similarity_topk(spark, sf_dir)
         .filter(F.col("rk") <= IVF_TOP_K)

@@ -192,11 +192,13 @@ def similarity_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 OOM path); a serialized memory+disk level keeps the blocks
     # compact and evictable. (PySpark's MEMORY_AND_DISK constant is the
     # serialized level — deserialized=False — unlike the JVM default.)
+    # A/B sf0.1 1.67→3.71 / 6.3→22.9 s
     arrs = pin(
         _shingle_arr_rel(spark, sf_dir),
         storage_level=StorageLevel.MEMORY_AND_DISK,
     )
     sh = arrs.select("doc_id", F.explode("arr").alias("sh"))
+    # A/B sf0.1 2.05→3.85 / 7.2→10.6 s
     prefix = rarity_prefix(sh, "sh", THETA_NUM, THETA_DEN).transform(pin)
     cand = prefix_pairs(prefix, "sh", "a_id", "b_id", THETA_NUM, THETA_DEN)
     # r13 (guide §2.5 flavor of the one-partition hazard): the
@@ -342,6 +344,7 @@ def similarity_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serialized level: corpus-scale pin (VERDICT r13 #4) — see the
     # prefix-join comment; a_pref below stays at the default level
     # (prefix-bounded, far smaller than the corpus)
+    # A/B sf0.1 2.02→18.42 / 7.3→55.3 s
     arrs_full = pin(
         _shingle_arr_rel(spark, sf_dir),
         storage_level=StorageLevel.MEMORY_AND_DISK,
@@ -350,6 +353,7 @@ def similarity_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned: the two-window rarity chain is the second-most expensive
     # subtree here and a_pref is re-read every execution (r13 A/B in
     # the docstring — 3.46 -> 1.13 s steady)
+    # A/B sf0.1 2.04→4.15 / 7.3→11.3 s
     a_pref = pin(
         rarity_prefix(sh, "sh", CONT_NUM, CONT_DEN).select(
             F.col("doc_id").alias("a_id"),

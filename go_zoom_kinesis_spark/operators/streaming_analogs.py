@@ -630,10 +630,7 @@ def watermark_lateness_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized: the rows/BATCH chunk relation feeds BOTH the
     # super-chunk reduction and the offset join-back — left lazy, each
     # branch would re-scan the fact table (2 scans stay the contract).
-    # localCheckpoint, not cache (ADVICE r10): checkpoint blocks are
-    # freed by the ContextCleaner when this query's handles die,
-    # whereas a CacheManager entry outlives the query and accumulates
-    # across a long bench/suite session
+    # A/B sf0.1 0.45→0.77 / 1.5→2.0 s, sf1 0.79→2.17 / 2.4→4.8 s
     cmax = (
         chunked.groupBy("batch_no", "shard_id")
         .agg(F.max("tsu").alias("cmax"))

@@ -67,10 +67,11 @@ def ts_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("value").cast(DEC).alias("v"),
     )
+    # A/B sf0.1 0.13→0.27 / 0.6→1.0 s, sf1 0.11→0.45 / 0.8→1.3 s
     hour = (
         ev.groupBy("event_type", "bucket_day", "bucket_hour")
         .agg(F.count("*").alias("n_events"), F.sum("v").alias("sv"))
-        .cache()  # bounded: one row per distinct (type, hour)
+        .transform(pin)  # bounded: one row per distinct (type, hour)
     )
     day = hour.groupBy("event_type", "bucket_day").agg(
         F.sum("n_events").alias("n_events"), F.sum("sv").alias("sv")
@@ -482,6 +483,7 @@ def interval_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ts") + F.expr(f"INTERVAL {ACTIVE_MIN} MINUTES")).alias("t"),
         F.lit(-1).alias("delta"),
     )
+    # A/B sf0.1 0.37→0.73 / 1.2→2.1 s, sf1 0.38→1.71 / 1.9→5.2 s
     net = (
         starts.unionByName(ends)
         .groupBy("event_type", "t")

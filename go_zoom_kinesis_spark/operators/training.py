@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..persist import pin
 
 K_ANON = 10  # minimum safe equivalence-class size
 
@@ -122,19 +123,18 @@ def quantile_sketch_over(
     ).collect()[0]["d"]
     if n_distinct > domain_limit:
         return _quantile_sketch_only(spark, cents_df)
-    per_val = (
-        cents_df.groupBy("cents")
-        .agg(F.count("*").alias("cnt"))
-        .cache()  # the ONLY corpus-scale aggregate; stats + est + exact
-        # all derive from it — caching the domain-bounded table keeps
-        # the 100 TB scan single-pass instead of one per branch
-    )
+    # the ONLY corpus-scale aggregate; stats + est + exact all derive
+    # from it, and every reader sits inside the pinned `vals` below, so
+    # it is computed once without a pin of its own (A/B: steady 0.40 →
+    # 0.36 s at sf0.1, 0.43 → 0.44 s at sf1 without one)
+    per_val = cents_df.groupBy("cents").agg(F.count("*").alias("cnt"))
     stats = per_val.agg(
         F.min("cents").alias("lo"),
         F.max("cents").alias("hi"),
         F.sum("cnt").alias("n"),
     )
     wv = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
+    # A/B sf0.1 0.35→0.41 / 1.2→1.4 s, sf1 0.31→0.41 / 1.3→1.5 s
     vals = (
         per_val.join(F.broadcast(stats))
         .withColumn("cum", F.sum("cnt").over(wv))
@@ -144,7 +144,7 @@ def quantile_sketch_over(
                 F.expr(f"(hi - lo + 1) div {N_QUANTILE_BINS}"), F.lit(1)
             ),
         )
-        .cache()  # shared by bins (est path) and the exact path
+        .transform(pin)  # shared by bins (est path) and the exact path
     )
     bins = (
         vals.withColumn("bin", F.expr("(cents - lo) div width"))

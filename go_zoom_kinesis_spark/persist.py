@@ -37,7 +37,14 @@ and ``cache`` store the same memory-deserialized blocks, so choosing
 between them changes durability, not block format.
 
 Kept out of ``io.py`` on purpose: loaders stay dumb (no persistence),
-and operators import one verb, not a strategy matrix.
+and operators import one verb, not a strategy matrix. No operator
+calls ``.cache()`` or ``.persist()`` itself
+(``tests/test_persist_strategy.py`` scans for it). A pin stays at a
+call site only where it bounds an iterative loop's lineage, or where
+removing it made steady or build + cold + steady worse beyond noise
+(``bench.time_query``, alternating runs). Such a site's comment reads
+``# A/B <sf> <steady> / <build+cold+steady> s``: medians on a 4-core /
+15 GB host, pinned → unpinned.
 """
 
 from __future__ import annotations

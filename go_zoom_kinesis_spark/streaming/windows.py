@@ -8,7 +8,9 @@ These builders work on BOTH batch and streaming DataFrames — the same
 plan verified against the DuckDB oracle in batch runs unchanged as a
 Structured Streaming query with watermark-driven state eviction (the
 Spark analog of the reference's 2×-window idle-shard eviction,
-src/monitoring/metrics.rs:357-360).
+src/monitoring/metrics.rs:357-360). Every builder applies its
+watermark unconditionally: on a batch frame the optimizer drops the
+``EventTimeWatermark`` node, so batch rows are unchanged.
 """
 
 from __future__ import annotations
@@ -27,16 +29,14 @@ def tumbling_metrics(
     events: DataFrame,
     window: str = "1 hour",
     watermark: str = "2 hours",
-    streaming: bool = True,
 ) -> DataFrame:
     """Per-shard tumbling-window metrics (SURVEY §2.1 A2/A3 on event
-    time). In streaming mode the watermark bounds state: windows older
+    time). On a stream the watermark bounds state: windows older
     than (max event time − watermark) are finalized and evicted."""
-    src = with_shard(events)
-    if streaming:
-        src = src.withWatermark("ts", watermark)
     return (
-        src.groupBy("shard_id", F.window("ts", window).alias("w"))
+        with_shard(events)
+        .withWatermark("ts", watermark)
+        .groupBy("shard_id", F.window("ts", window).alias("w"))
         .agg(
             F.count("*").alias("n_events"),
             F.max("event_id").alias("checkpoint_seq"),
@@ -57,15 +57,13 @@ def sliding_metrics(
     window: str = "1 hour",
     slide: str = "30 minutes",
     watermark: str = "2 hours",
-    streaming: bool = True,
 ) -> DataFrame:
     """Per-shard sliding-window counts; each event contributes to
     window/slide buckets."""
-    src = with_shard(events)
-    if streaming:
-        src = src.withWatermark("ts", watermark)
     return (
-        src.groupBy("shard_id", F.window("ts", window, slide).alias("w"))
+        with_shard(events)
+        .withWatermark("ts", watermark)
+        .groupBy("shard_id", F.window("ts", window, slide).alias("w"))
         .agg(F.count("*").alias("n_events"))
         .select(
             "shard_id",
@@ -80,16 +78,13 @@ def session_metrics(
     events: DataFrame,
     gap: str = "2 hours",
     watermark: str = "4 hours",
-    streaming: bool = True,
 ) -> DataFrame:
     """Per-user session windows with a merge gap — Structured
     Streaming's session_window; closes (and evicts state for) a session
     once the watermark passes its end."""
-    src = events
-    if streaming:
-        src = src.withWatermark("ts", watermark)
     return (
-        src.groupBy("user_id", F.session_window("ts", gap).alias("w"))
+        events.withWatermark("ts", watermark)
+        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
         .agg(
             F.count("*").alias("n_events"),
             F.min("event_id").alias("first_event_id"),
@@ -110,7 +105,6 @@ ATTRIBUTION_WINDOW = "30 minutes"
 def click_view_attribution(
     views: DataFrame,
     clicks: DataFrame,
-    streaming: bool = True,
     watermark: str = "1 hour",
     join_type: str = "inner",
 ) -> DataFrame:
@@ -144,15 +138,12 @@ def click_view_attribution(
         F.col("user_id").alias("v_user"),
         F.col("ts").alias("v_ts"),
         F.col("event_id").alias("view_id"),
-    )
+    ).withWatermark("v_ts", watermark)
     c = clicks.select(
         F.col("user_id").alias("c_user"),
         F.col("ts").alias("c_ts"),
         F.col("event_id").alias("click_id"),
-    )
-    if streaming:
-        v = v.withWatermark("v_ts", watermark)
-        c = c.withWatermark("c_ts", watermark)
+    ).withWatermark("c_ts", watermark)
     cond = (
         (F.col("v_user") == F.col("c_user"))
         & (F.col("c_ts") >= F.col("v_ts"))

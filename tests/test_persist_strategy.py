@@ -15,11 +15,14 @@ job). These tests pin:
   ``checkpoint`` writes RDD files under the configured reliable dir
   and fails LOUDLY when no dir is configured (silently falling back
   to a non-durable store would defeat the knob's purpose),
-- unknown strategy names fail loudly.
+- unknown strategy names fail loudly,
+- ``pin`` stays the operators' only persistence verb: no operator
+  module calls ``.cache()`` or ``.persist(...)`` itself.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 
 import pytest
@@ -119,3 +122,28 @@ def test_unknown_strategy_fails_loudly(strategy_conf):
     spark.conf.set(STRATEGY_CONF, "tachyon")
     with pytest.raises(ValueError, match="tachyon"):
         spark.range(8).transform(pin)
+
+
+def test_operators_persist_only_through_pin():
+    """A raw ``.cache()``/``.persist()`` ignores the strategy conf and
+    holds a CacheManager strong ref past its query; operators must pin
+    (AST scan, no Spark needed)."""
+    ops = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "go_zoom_kinesis_spark",
+        "operators",
+    )
+    found = []
+    for fname in sorted(os.listdir(ops)):
+        if not fname.endswith(".py"):
+            continue
+        with open(os.path.join(ops, fname)) as fh:
+            tree = ast.parse(fh.read(), fname)
+        found += [
+            f"{fname}:{node.lineno} .{node.func.attr}()"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("cache", "persist")
+        ]
+    assert not found, f"persist through persist.pin instead: {found}"

@@ -312,15 +312,14 @@ def test_minibatch_single_stratum_shuffle(spark, sf_dir):
 
 def test_quantile_sketch_one_corpus_aggregate(spark, sf_dir):
     """The per-value count table is the only corpus-scale aggregate;
-    it must partial-aggregate map-side and be cached (InMemory) so the
-    est/exact branches do not rescan events."""
+    it must partial-aggregate map-side and be pinned (with its
+    cumulative window) so the est/exact branches do not rescan events."""
     plan = _plan(spark, sf_dir, "quantile_sketch_audit")
     assert "partial_count" in plan or "partial_" in plan
-    # every branch must read the cached per-value table, not re-scan
-    # events (InMemoryRelation plan text embeds its defining FileScan,
-    # so counting scan strings over-counts; the load-bearing fact is
-    # that the consumers are InMemoryTableScans)
-    assert plan.count("InMemoryTableScan") >= 3
+    # both branches read the pinned per-value table, and no branch
+    # scans the events parquet (the scan ran once, inside the pin)
+    assert plan.count("Scan ExistingRDD") >= 2
+    assert "FileScan" not in plan
 
 
 def test_aqe_skew_join_fires_at_runtime(spark, tmp_path):

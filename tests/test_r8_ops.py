@@ -899,14 +899,13 @@ def test_purged_timefold_referee(spark, sf_dir):
 
 def test_purged_timefold_plan_bucketed(spark, sf_dir):
     """Contract: event rows are never windowed or joined — every
-    window and join input is the bounded hour-bucket relation, cached
-    once (the plan shows InMemoryTableScans over one materialized
-    bucket aggregate; at most that single parquet scan materializes),
-    and there is no cartesian."""
+    window and join input is the bounded hour-bucket relation, pinned
+    once (the plan reads one materialized bucket aggregate in every
+    branch; the single parquet scan ran inside the pin), and there is
+    no cartesian."""
     plan = _plan(spark, sf_dir, "purged_timefold_assign")
-    # every branch reads the cached bucket relation (plan text repeats
-    # the InMemoryRelation's child scan under each InMemoryTableScan —
-    # and nests deeper when a prior execution's cache is reused — so
-    # the pin is branch count, not raw scan-string count)
-    assert plan.count("InMemoryTableScan") >= 3
+    # every branch (fold ranges, embargo bucket side, corpus total)
+    # reads the pinned bucket relation, and no branch scans events
+    assert plan.count("Scan ExistingRDD") >= 3
+    assert "FileScan" not in plan
     assert "CartesianProduct" not in plan

@@ -53,14 +53,14 @@ def _rows(spark, df):
 
 
 def test_tumbling_stream_equals_batch(spark, tmp_path, events_batch, events_stream):
-    batch = tumbling_metrics(events_batch, streaming=False)
+    batch = tumbling_metrics(events_batch)
     name = _run_complete(tumbling_metrics(events_stream), tmp_path, "tumbling_t")
     got = spark.sql(f"SELECT * FROM {name}")
     assert _rows(spark, got) == _rows(spark, batch)
 
 
 def test_sliding_stream_equals_batch(spark, tmp_path, events_batch, events_stream):
-    batch = sliding_metrics(events_batch, streaming=False)
+    batch = sliding_metrics(events_batch)
     name = _run_complete(sliding_metrics(events_stream), tmp_path, "sliding_t")
     got = spark.sql(f"SELECT * FROM {name}")
     assert _rows(spark, got) == _rows(spark, batch)
@@ -70,7 +70,7 @@ def test_session_stream_equals_batch(spark, tmp_path, events_batch, events_strea
     """The same session_window plan must produce identical sessions in
     batch and streaming (r6 verdict item 7: session windows were the
     one window family without this pin)."""
-    batch = session_metrics(events_batch, streaming=False)
+    batch = session_metrics(events_batch)
     name = _run_complete(session_metrics(events_stream), tmp_path, "session_eq_t")
     got = spark.sql(f"SELECT * FROM {name}")
     assert _rows(spark, got) == _rows(spark, batch)
@@ -102,7 +102,7 @@ def test_session_append_watermark_finalizes_and_evicts(
 
     max_ts = events_batch.agg(F.max("ts")).collect()[0][0]
     wm = max_ts - datetime.timedelta(hours=4)
-    batch = session_metrics(events_batch, streaming=False)
+    batch = session_metrics(events_batch)
     closed = batch.filter(F.col("session_end") <= F.lit(wm))
     assert _rows(spark, got) == _rows(spark, closed)
     # the eviction actually bites: something was emitted AND the open
@@ -175,7 +175,7 @@ def test_stream_stream_join_equals_batch(spark, tmp_path, events_batch, events_s
 
     views_b = events_batch.filter(F.col("event_type") == "view")
     clicks_b = events_batch.filter(F.col("event_type") == "click")
-    batch = click_view_attribution(views_b, clicks_b, streaming=False)
+    batch = click_view_attribution(views_b, clicks_b)
 
     views_s = events_stream.filter(F.col("event_type") == "view")
     clicks_s = events_stream.filter(F.col("event_type") == "click")
@@ -282,7 +282,6 @@ def test_stream_stream_left_outer_flushes_on_watermark(spark, tmp_path, events_b
     batch = click_view_attribution(
         early.filter(F.col("event_type") == "view"),
         early.filter(F.col("event_type") == "click"),
-        streaming=False,
         join_type="left_outer",
     )
     # repr-sort: null-padded rows contain None, which plain tuple
@@ -354,7 +353,6 @@ def test_stream_stream_full_outer_flushes_both_sides(spark, tmp_path, events_bat
     batch = click_view_attribution(
         early.filter(F.col("event_type") == "view"),
         early.filter(F.col("event_type") == "click"),
-        streaming=False,
         join_type="full_outer",
     )
 
@@ -377,7 +375,6 @@ def test_stream_stream_inner_unchanged_by_outer_param(spark, sf_dir):
     out = click_view_attribution(
         ev.filter(F.col("event_type") == "view"),
         ev.filter(F.col("event_type") == "click"),
-        streaming=False,
     )
     assert out.filter(F.col("click_id").isNull()).count() == 0
     assert out.count() > 0
@@ -404,7 +401,7 @@ def test_tumbling_stream_rocksdb_state_store(
             tumbling_metrics(events_stream), tmp_path, "tumbling_rocks_t"
         )
         got = spark.sql(f"SELECT * FROM {name}")
-        batch = tumbling_metrics(events_batch, streaming=False)
+        batch = tumbling_metrics(events_batch)
         assert _rows(spark, got) == _rows(spark, batch)
     finally:
         if old is None:
@@ -465,9 +462,9 @@ def test_stream_stream_right_outer_mirrors_left(spark, sf_dir):
     views = ev.filter(F.col("event_type") == "view")
     clicks = ev.filter(F.col("event_type") == "click")
     ro = click_view_attribution(
-        views, clicks, streaming=False, join_type="right_outer"
+        views, clicks, join_type="right_outer"
     )
-    inner = click_view_attribution(views, clicks, streaming=False)
+    inner = click_view_attribution(views, clicks)
     # right-outer = inner plus unmatched CLICKS null-padded on the view side
     assert ro.filter(F.col("view_id").isNull()).count() == (
         ro.count() - inner.count()
