@@ -324,20 +324,11 @@ def decontaminate_semantic_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 8 hyperplane-projection folds over the corpus TWICE per
     # execution. Pin the hashed relation once (the same compute-once
     # posture a production index takes for its signature table).
-    # r14 (VERDICT r13 #4, guide §5): the pinned signature relation is
-    # CORPUS-scale (every embedding + its norm and bucket), so use the
-    # serialized memory+disk level — deserialized default blocks
-    # inflate each vector into boxed objects and re-promote disk reads
-    # into memory (SCALE.md r12 OOM path); serialized blocks stay
-    # compact and evict under pressure.
-    from pyspark import StorageLevel
-
     # A/B sf0.1 0.15→0.43 / 1.0→1.5 s, sf1 0.23→1.40 / 2.1→3.3 s
     emb = pin(
         _with_norm(_emb(spark, sf_dir)).withColumn(
             "bucket", _bucket_col(F.col("emb"))
-        ),
-        storage_level=StorageLevel.MEMORY_AND_DISK,
+        )
     )
     ev = emb.filter(F.col("vec_id") % SEM_EVAL_MOD == 0).select(
         "bucket",

@@ -43,8 +43,7 @@ def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings (lexicographic — the cast precedes the extremum).
 
     Plan (r14, VERDICT r13 #1 / guide §2.3-§2.4): pin the 5-column
-    projection once (serialized level at real scale — it is
-    corpus-scale; see the in-body level comment), then run
+    projection once, then run
     FIVE NARROW TYPED per-value aggregates — one ``groupBy(col).count``
     per profiled column, each a whole-stage-codegen hash aggregate
     keyed by the column's NATIVE type with map-side combine — union
@@ -75,26 +74,11 @@ def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.1 s, string-unpivot 1.8 s (r4), + projection/fan-out 1.32 s
     (r13), this form measured against the r13 one in
     OPTIMIZATION_r14.md."""
-    from pyspark import StorageLevel
-
     from ..persist import pin
 
     raw = load_table(spark, sf_dir, "lineitem").select(*PROFILE_COLS)
-    # Pin level is scale-adaptive, the `_star_components` discipline:
-    # a corpus-scale pin takes the SERIALIZED memory+disk level (the
-    # deserialized default inflates rows into object arrays and
-    # re-promotes disk reads into memory — SCALE.md r12 OOM path),
-    # while the tiny single-file local layout keeps the default —
-    # its five branch re-reads deserialize 5x otherwise (measured
-    # +0.2 s of the 0.78 s total at sf0.1). Same metadata signal as
-    # io.fan_out_narrow: a real multi-split scan means real scale.
-    files = raw.inputFiles()
-    big = bool(files) and len(files) >= spark.sparkContext.defaultParallelism
-    # A/B sf0.1 0.54→1.70 / 2.5→5.4 s, sf1 5.08→2.35 / 12.8→5.6 s
-    li = pin(
-        fan_out_narrow(raw),
-        storage_level=StorageLevel.MEMORY_AND_DISK if big else None,
-    )
+    # A/B sf0.1 0.39→1.19 / 1.7→3.0 s, sf1 1.73→1.65 / 4.7→3.8 s
+    li = pin(fan_out_narrow(raw))
     per_val = reduce(
         DataFrame.unionByName,
         [

@@ -36,7 +36,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -184,19 +183,8 @@ def similarity_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rejected was pinning the EXPLODED stream (one row per shingle,
     # read back thrice: 0.9 -> 3.7 s); the compact form is |docs| rows
     # and replaces HOF re-execution, not cheap scans.
-    #
-    # r14 (VERDICT r13 #4, guide §5): this pin is CORPUS-scale — one
-    # row per document carrying the full shingle array ≈ the tokenized
-    # corpus. Deserialized default blocks inflate each array into boxed
-    # objects and re-promote disk reads back into memory (the SCALE.md
-    # r12 OOM path); a serialized memory+disk level keeps the blocks
-    # compact and evictable. (PySpark's MEMORY_AND_DISK constant is the
-    # serialized level — deserialized=False — unlike the JVM default.)
     # A/B sf0.1 1.67→3.71 / 6.3→22.9 s
-    arrs = pin(
-        _shingle_arr_rel(spark, sf_dir),
-        storage_level=StorageLevel.MEMORY_AND_DISK,
-    )
+    arrs = pin(_shingle_arr_rel(spark, sf_dir))
     sh = arrs.select("doc_id", F.explode("arr").alias("sh"))
     # A/B sf0.1 2.05→3.85 / 7.2→10.6 s
     prefix = rarity_prefix(sh, "sh", THETA_NUM, THETA_DEN).transform(pin)
@@ -341,14 +329,8 @@ def similarity_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     by ~10x, and the pinned blocks are |docs|- and |prefix|-bounded
     (the compact array relation is the dedup-pipeline working set,
     not a corpus-scale explode)."""
-    # serialized level: corpus-scale pin (VERDICT r13 #4) — see the
-    # prefix-join comment; a_pref below stays at the default level
-    # (prefix-bounded, far smaller than the corpus)
     # A/B sf0.1 2.02→18.42 / 7.3→55.3 s
-    arrs_full = pin(
-        _shingle_arr_rel(spark, sf_dir),
-        storage_level=StorageLevel.MEMORY_AND_DISK,
-    )
+    arrs_full = pin(_shingle_arr_rel(spark, sf_dir))
     sh = arrs_full.select("doc_id", F.explode("arr").alias("sh"))
     # pinned: the two-window rarity chain is the second-most expensive
     # subtree here and a_pref is re-read every execution (r13 A/B in

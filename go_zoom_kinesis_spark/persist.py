@@ -32,9 +32,17 @@ conf:
 Every pin is eager, like ``localCheckpoint(eager=True)``: the call
 materializes before returning. Iterative operators rely on that for
 plan-size and timing control; ``cache`` emulates it with a
-``count()`` action. With no ``storage_level``, ``localCheckpoint``
-and ``cache`` store the same memory-deserialized blocks, so choosing
-between them changes durability, not block format.
+``count()`` action. ``localCheckpoint`` and ``cache`` store the same
+memory-and-disk deserialized blocks, so choosing between them changes
+durability, not block format.
+
+One block format: every pin takes that default, with one exception
+under one rule. ``search._star_components`` pins serialized
+memory-and-disk blocks inside its resized shuffle scope, the scope
+that OOM'd a 10^8-node graph on a 16 GB heap with deserialized blocks
+(SCALE.md r12). On the four other pins that took a serialized
+level it never paid at sf0.1 or at generated sf1, and it doubled
+``profile_columns``' steady time at sf1 (SCALE.md, r14 follow-up).
 
 Kept out of ``io.py`` on purpose: loaders stay dumb (no persistence),
 and operators import one verb, not a strategy matrix. No operator
@@ -66,14 +74,14 @@ def pin(df: DataFrame, storage_level=None) -> DataFrame:
     docstring) instead of recomputing its upstream plan.
 
     ``storage_level`` (localCheckpoint/cache strategies only; the
-    reliable store ignores it) overrides the default
-    memory-deserialized block format. Iterative operators whose
-    pinned relations approach the executor heap pass a SERIALIZED or
-    DISK_ONLY level: deserialized value blocks inflate rows into
-    object arrays and are re-promoted to memory on every disk read
-    (``maybeCacheDiskValuesInMemory``) — the measured 1e8-node OOM
-    path (SCALE.md r12) — while serialized blocks stay compact and
-    evict under pressure.
+    reliable store ignores it) overrides the default deserialized
+    memory-and-disk block format. One caller passes it, under one
+    rule: ``search._star_components`` pins serialized inside its
+    resized shuffle scope, where deserialized value blocks inflate
+    rows into object arrays and are re-promoted to memory on every
+    disk read (``maybeCacheDiskValuesInMemory``) — the measured
+    10^8-node OOM path (SCALE.md r12). Every other pin leaves it unset
+    (``tests/test_persist_strategy.py`` scans for it).
     """
     spark = df.sparkSession
     strategy = spark.conf.get(STRATEGY_CONF, "localCheckpoint")

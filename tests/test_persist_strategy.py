@@ -17,7 +17,9 @@ job). These tests pin:
   to a non-durable store would defeat the knob's purpose),
 - unknown strategy names fail loudly,
 - ``pin`` stays the operators' only persistence verb: no operator
-  module calls ``.cache()`` or ``.persist(...)`` itself.
+  module calls ``.cache()`` or ``.persist(...)`` itself,
+- one block format: only ``search._star_components`` chooses a
+  ``storage_level``.
 """
 
 from __future__ import annotations
@@ -124,21 +126,26 @@ def test_unknown_strategy_fails_loudly(strategy_conf):
         spark.range(8).transform(pin)
 
 
+OPS_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "go_zoom_kinesis_spark",
+    "operators",
+)
+
+
+def _operator_trees():
+    for fname in sorted(os.listdir(OPS_DIR)):
+        if fname.endswith(".py"):
+            with open(os.path.join(OPS_DIR, fname)) as fh:
+                yield fname, ast.parse(fh.read(), fname)
+
+
 def test_operators_persist_only_through_pin():
     """A raw ``.cache()``/``.persist()`` ignores the strategy conf and
     holds a CacheManager strong ref past its query; operators must pin
     (AST scan, no Spark needed)."""
-    ops = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "go_zoom_kinesis_spark",
-        "operators",
-    )
     found = []
-    for fname in sorted(os.listdir(ops)):
-        if not fname.endswith(".py"):
-            continue
-        with open(os.path.join(ops, fname)) as fh:
-            tree = ast.parse(fh.read(), fname)
+    for fname, tree in _operator_trees():
         found += [
             f"{fname}:{node.lineno} .{node.func.attr}()"
             for node in ast.walk(tree)
@@ -147,3 +154,39 @@ def test_operators_persist_only_through_pin():
             and node.func.attr in ("cache", "persist")
         ]
     assert not found, f"persist through persist.pin instead: {found}"
+
+
+def test_only_star_components_chooses_a_storage_level():
+    """Pins take ``pin``'s one block format; the only exception is
+    ``search._star_components``' resized scope (the SCALE.md r12 OOM
+    bed), so a ``storage_level=`` keyword or a ``StorageLevel`` name
+    anywhere else under ``operators/`` fails (AST scan, no Spark
+    needed)."""
+    found = []
+    for fname, tree in _operator_trees():
+        allowed = set()
+        if fname == "search.py":
+            for fn in ast.walk(tree):
+                if (
+                    isinstance(fn, ast.FunctionDef)
+                    and fn.name == "_star_components"
+                ):
+                    allowed |= {id(node) for node in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if id(node) in allowed:
+                continue
+            if isinstance(node, ast.keyword) and node.arg == "storage_level":
+                found.append(f"{fname}:{node.value.lineno} storage_level=")
+            elif (
+                (isinstance(node, ast.Name) and node.id == "StorageLevel")
+                or (
+                    isinstance(node, ast.Attribute)
+                    and node.attr == "StorageLevel"
+                )
+                or (
+                    isinstance(node, ast.alias)
+                    and node.name == "StorageLevel"
+                )
+            ):
+                found.append(f"{fname}:{node.lineno} StorageLevel")
+    assert not found, f"pin with the default block format instead: {found}"
